@@ -52,29 +52,51 @@ final class SessionMemo[K, V] extends SessionMemo.Evictable {
   * segment path string on every append/fold and never evicted until
   * application end — unbounded driver memory on a long-running
   * session). Same application-lifecycle eviction as
-  * [[SessionMemo]]. */
-final class ListingMemo[V] extends SessionMemo.Evictable {
+  * [[SessionMemo]].
+  *
+  * `release(old, next)` runs when `next` REPLACES `old` under a new
+  * listing and frees what of `old` that `next` does not carry over
+  * (e.g. unpersisting the frames of a serving snapshot the new
+  * listing no longer names), so the resources a store's superseded
+  * listing held go with it. */
+final class ListingMemo[V](release: (V, V) => Unit = (_: V, _: V) => ())
+    extends SessionMemo.Evictable {
 
   private val entries =
     new ConcurrentHashMap[(String, String), (String, V)]
 
   /** The cached value while `listing` matches the entry's recorded
     * listing; otherwise compute and replace. Concurrent recomputes of
-    * one store race benignly — builds here are pure counts of
+    * one store race benignly — builds here are pure functions of
     * immutable segments, so last-put-wins is any of the same value. */
   def getOrCompute(s: SparkSession, storeDir: String, listing: String)
-                  (build: => V): V = {
+                  (build: => V): V =
+    getOrReplace(s, storeDir, listing)(_ => build)
+
+  /** [[getOrCompute]] whose build sees the value being replaced (None
+    * on a store's first listing) — so a build can carry over whatever
+    * of the old value the new listing still names. The replaced value
+    * is released against its replacement unless a racing build of the
+    * SAME listing put it there (same listing, same value by purity:
+    * releasing it would drop what the winner shares). */
+  def getOrReplace(s: SparkSession, storeDir: String, listing: String)
+                  (build: Option[V] => V): V = {
     val appId = s.sparkContext.applicationId
     SessionMemo.hookEviction(s, this)
     val key = (appId, storeDir)
     val cur = entries.get(key)
     if (cur != null && cur._1 == listing) cur._2
     else {
-      val v = build
-      entries.put(key, (listing, v))
+      val v = build(Option(cur).map(_._2))
+      val prev = entries.put(key, (listing, v))
+      if (prev != null && prev._1 != listing) release(prev._2, v)
       v
     }
   }
+
+  /** The value `storeDir` currently holds in application `appId`. */
+  private[graft] def current(appId: String, storeDir: String): Option[V] =
+    Option(entries.get((appId, storeDir))).map(_._2)
 
   private[graft] def evict(appId: String): Unit =
     entries.keySet.removeIf(_._1 == appId)

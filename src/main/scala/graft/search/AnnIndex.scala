@@ -402,23 +402,28 @@ object AnnIndex {
     * bit-identical. `payload` names persisted columns to carry into the
     * output (read from the rescore scan — already open for the
     * embeddings). */
-  /** `exclude`, when given, is a (vec_id) frame anti-joined into BOTH
-    * artifact scans BEFORE any ranking — the tombstone hook: excluded
-    * ids can neither shortlist nor rescore, so the top-k back-fills
-    * with live rows exactly (no oversample-then-drop under-fill). The
-    * exclude side is tiny by contract (live tombstones between major
-    * folds) and broadcasts. */
+  /** `exclude`, when given, is a frame of `vec_id`s anti-joined into
+    * the shortlist scan BEFORE any ranking — the tombstone hook:
+    * excluded ids can neither shortlist nor rescore, so the top-k
+    * back-fills with live rows exactly (no oversample-then-drop
+    * under-fill). The join takes `exclude` as given, hint included:
+    * callers holding a tombstone store apply [[tombstoneHint]]'s
+    * size-gated broadcast, so a store past
+    * [[TombstoneBroadcastMaxBytes]] plans a shuffle anti-join instead
+    * of a driver-sized broadcast. `artifact` is the artifact's
+    * `corpus` relation when the caller already holds one (a serving
+    * snapshot), so the probe skips re-resolving it. */
   def probeIvfPq(spark: SparkSession, dir: String, query: Array[Float],
                  k: Int, nProbe: Int, shortlist: Int,
                  predicate: Column = lit(true),
                  payload: Seq[String] = Nil,
-                 exclude: Option[DataFrame] = None): DataFrame = {
+                 exclude: Option[DataFrame] = None,
+                 artifact: Option[DataFrame] = None): DataFrame = {
     val probed = probedCells(spark, dir, query, nProbe)
-    val corpus = spark.read.parquet(s"$dir/corpus")
+    val corpus = artifact.getOrElse(spark.read.parquet(s"$dir/corpus"))
     def live(df: DataFrame): DataFrame = exclude match {
       case None => df
-      case Some(ex) =>
-        df.join(broadcast(ex.select(col("vec_id"))), Seq("vec_id"), "left_anti")
+      case Some(ex) => df.join(ex, Seq("vec_id"), "left_anti")
     }
     val short = live(corpus
         .filter(col("cell").isin(probed: _*))
@@ -605,11 +610,17 @@ object AnnIndex {
     * runs per micro-batch. Layout under `deltaDir`:
     *
     *  - `live/b<batchId>/` — one immutable cell-partitioned parquet
-    *    segment PER BATCH, written mode(overwrite): an at-least-once
-    *    replay of a batch rewrites its own directory instead of
-    *    appending duplicate rows — the idempotence foreachBatch's
-    *    delivery contract requires (encodeSegment is deterministic,
-    *    so the rewrite is bit-identical).
+    *    segment PER BATCH, committed by temp-dir + rename: an
+    *    at-least-once replay of an already-committed batch is a NO-OP
+    *    (encodeSegment is deterministic, so the committed directory
+    *    already holds exactly the replay's rows) — the idempotence
+    *    foreachBatch's delivery contract requires, without appending
+    *    duplicate rows or recycling a directory a reader may be
+    *    scanning. Only an uncommitted partial is ever rewritten. A
+    *    committed segment dir therefore never changes content, which
+    *    is what lets [[graft.search.SearchEngine]]'s serving snapshot
+    *    key its cached relations and live-delta rows by segment paths
+    *    alone.
     *  - `compacted_g<gen>/` — immutable folded generations: each
     *    compaction unions the previous generation with the live tail,
     *    dedups on vec_id (the backstop that keeps rows from a batch
@@ -677,11 +688,15 @@ object AnnIndex {
     else {
       val segs = graft.sources.SegmentStore.segments(fs, dir)
       if (segs.isEmpty) None
-      else Some(segs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-        .groupBy(col("vec_id"))
-        .agg(max(col(graft.sources.SegmentStore.BatchCol)).as("del_batch")))
+      else Some(lastDeletes(segs.map(spark.read.parquet(_)).reduce(_.unionByName(_))))
     }
   }
+
+  /** A tombstone store's raw rows folded to (vec_id, del_batch = newest
+    * delete batch per id) — the shape every tombstone shadow joins. */
+  private[graft] def lastDeletes(tombstoneRows: DataFrame): DataFrame =
+    tombstoneRows.groupBy(col("vec_id"))
+      .agg(max(col(graft.sources.SegmentStore.BatchCol)).as("del_batch"))
 
   /** The delta's CURRENT segment set — [[graft.sources.SegmentStore.segments]]. */
   private[graft] def deltaSegments(fs: org.apache.hadoop.fs.FileSystem,
@@ -742,13 +757,20 @@ object AnnIndex {
     * `broadcast` while the store's raw bytes (filesystem metadata
     * only — no job) stay under [[TombstoneBroadcastMaxBytes]],
     * identity past it. Shared by every tombstone-excluding read path
-    * (the LSM probes here, the exact routes in SearchEngine). */
+    * (the LSM probes here, the exact routes and the serving snapshot
+    * in SearchEngine). */
   private[graft] def tombstoneHint(spark: SparkSession,
                                    deltaDir: String): DataFrame => DataFrame = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
-    val bytes = graft.sources.SegmentStore
-      .segments(fs, s"$deltaDir/tombstones")
+    tombstoneHint(fs, graft.sources.SegmentStore.segments(fs, s"$deltaDir/tombstones"))
+  }
+
+  /** [[tombstoneHint]] over an already-resolved tombstone segment
+    * listing (a caller that holds the listing skips re-resolving it). */
+  private[graft] def tombstoneHint(fs: org.apache.hadoop.fs.FileSystem,
+                                   segments: Seq[String]): DataFrame => DataFrame = {
+    val bytes = segments
       .map(p => fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength)
       .sum
     if (bytes <= TombstoneBroadcastMaxBytes) broadcast(_) else identity

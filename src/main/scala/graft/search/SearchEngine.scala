@@ -31,6 +31,75 @@ object SearchEngine {
     * re-ingests of corpus ids — fail loudly, the service entry point
     * degrades to the exact scan). */
   val MaxCollisionPasses = 8
+
+  /** `filter` as one conjunctive equality predicate (lit(true) when
+    * empty — folds away at optimization). */
+  private[search] def filterPredicate(filter: Seq[(String, Any)]): Column =
+    filter.map { case (c, v) => col(c) === lit(v) }
+      .foldLeft(lit(true))(_ && _)
+
+  /** One SERVING SNAPSHOT: what a served request reads that is a pure
+    * function of the committed segment set, built once per set and
+    * reused by every request while the set is unchanged
+    * ([[SearchEngine.snapshot]]):
+    *
+    *  - `relations`: the parquet relations of the documents table, the
+    *    served artifact's `corpus` and every delta and tombstone
+    *    segment, by path (building a relation lists its files and
+    *    reads a footer — Spark jobs outside any query);
+    *  - `tombstoneIds`: the distinct tombstoned ids, the probes'
+    *    exclusion side, with `tombstoneHint` — the size-gated join
+    *    hint ([[AnnIndex.tombstoneHint]]) from the listing in hand;
+    *  - `liveDelta`: the delta's live rows after latest-batch-wins and
+    *    tombstone shadowing, every segment column kept so any
+    *    request's metadata filter applies on top ([[delta]]).
+    *
+    * The two derived frames are lazily `persist`ed: the first request
+    * that reads one materializes it inside its own query (no extra
+    * job), and a lost block recomputes from the lineage — the segment
+    * dirs are immutable — where a `localCheckpoint` block would fail
+    * the query. Sound because committed segment dirs never change
+    * content ([[AnnIndex.appendDeltaBatch]]): the paths name the
+    * data. */
+  private[graft] final class ServingSnapshot(
+      val relations: Map[String, DataFrame],
+      val segPaths: Seq[String],
+      val tombPaths: Seq[String],
+      val documents: DataFrame,
+      val artifact: DataFrame,
+      val deltaColumns: Set[String],
+      val liveDelta: Option[DataFrame],
+      val tombstoneIds: Option[DataFrame],
+      val tombstoneHint: DataFrame => DataFrame) {
+
+    /** The live delta under `filter` — `deltaSegsLww`'s rule: None
+      * when no segment carries every filtered column, else the filter
+      * applies per row after latest-wins (a row of a segment lacking
+      * the column is null there and never matches). */
+    def delta(filter: Seq[(String, Any)]): Option[DataFrame] =
+      liveDelta
+        .filter(_ => filter.forall { case (c, _) => deltaColumns.contains(c) })
+        .map(d => if (filter.isEmpty) d else d.filter(filterPredicate(filter)))
+
+    /** Unpersist the derived frames `next` does not carry over. A
+      * carried frame must stay cached: Spark's cache matches plans,
+      * not objects, so unpersisting it would drop `next`'s entry. */
+    def releaseAgainst(next: ServingSnapshot): Unit = {
+      def drop(mine: Option[DataFrame], theirs: Option[DataFrame]): Unit =
+        mine.filterNot(d => theirs.exists(_ eq d)).foreach(_.unpersist(blocking = false))
+      drop(liveDelta, next.liveDelta)
+      drop(tombstoneIds, next.tombstoneIds)
+    }
+  }
+
+  /** Serving snapshots, ONE entry per served store per application
+    * ([[graft.ListingMemo]]), replaced when the store's listing
+    * changes. Module-scoped like every graft memo, because the cached
+    * frames live in the application's cache, not in an engine: every
+    * engine serving a store reads one snapshot, and a dropped engine
+    * strands nothing. */
+  private[graft] val snapshots =
+    new graft.ListingMemo[ServingSnapshot](_.releaseAgainst(_))
 }
 
 /** Semantic top-k vector search over a document corpus — the Spark-native
@@ -53,6 +122,7 @@ final class SearchEngine(
     val embedder: Embedder = new HashingEmbedder(64)) {
 
   import spark.implicits._
+  import SearchEngine.{ServingSnapshot, filterPredicate, snapshots}
 
   /** Load the searchable corpus: embeddings joined to document payloads
     * (FIXTURES.md: `embeddings.vec_id` ↔ `documents.doc_id`). The dim
@@ -99,15 +169,9 @@ final class SearchEngine(
     topK(corpusWithDelta(sfDir, deltaDir, embedder.dim, filter),
       embedder.embed(prompt), k)
 
-  /** `filter` as one conjunctive equality predicate (lit(true) when
-    * empty — folds away at optimization). */
-  private def filterPredicate(filter: Seq[(String, Any)]): Column =
-    filter.map { case (c, v) => col(c) === lit(v) }
-      .foldLeft(lit(true))(_ && _)
-
   /** The CANONICAL id set an id-colliding bare delta put must not
     * shadow: on the session route the filtered live corpus; under a
-    * serving root (`mainDir` set) the epoch ARTIFACT's own rows — a
+    * serving root (`root`) the epoch ARTIFACT's own rows — a
     * document folded in from a past ingest is corpus-canonical once
     * an epoch publishes it, so correcting it still takes del + put.
     * The artifact is ONE frame under the per-frame filter rule
@@ -116,53 +180,76 @@ final class SearchEngine(
     * nothing — so an artifact without the filtered columns blocks no
     * delta row (the session rule exactly: canonical ids OUTSIDE the
     * filter don't block a matching delta row). */
-  private def canonicalIds(sfDir: String, mainDir: Option[String],
+  private def canonicalIds(sfDir: String, snap: ServingSnapshot, root: Boolean,
                            filter: Seq[(String, Any)]): DataFrame =
-    mainDir match {
-      case None =>
-        val c = corpus(sfDir, embedder.dim)
-        (if (filter.isEmpty) c else c.filter(filterPredicate(filter)))
-          .select($"doc_id")
-      case Some(m) =>
-        val art = spark.read.parquet(s"$m/corpus")
-        val present = filter.filter { case (c, _) => art.columns.contains(c) }
-        val kept =
-          if (filter.isEmpty) art
-          else if (present.size < filter.size) art.filter(lit(false))
-          else art.filter(filterPredicate(present))
-        kept.select(col("vec_id").as("doc_id"))
+    if (!root) {
+      val c = corpus(sfDir, embedder.dim)
+      (if (filter.isEmpty) c else c.filter(filterPredicate(filter)))
+        .select($"doc_id")
+    } else {
+      val art = snap.artifact
+      val present = filter.filter { case (c, _) => art.columns.contains(c) }
+      val kept =
+        if (filter.isEmpty) art
+        else if (present.size < filter.size) art.filter(lit(false))
+        else art.filter(filterPredicate(present))
+      kept.select(col("vec_id").as("doc_id"))
     }
 
-  /** Payload rows for the MAIN-side hit ids (≤ k — every lookup
-    * reaches parquet as a pushed In filter). On the session route
-    * every main hit is a corpus document. Under a serving root the
-    * epoch corpus may CARRY text for rows folded in from past ingests
-    * (the documents table never had them) — those ids read their
-    * payload from the artifact itself, and where both sources know an
-    * id the artifact wins: its row is the NEWER version by the fold's
-    * latest-op-wins construction (a del+put correction folded over a
-    * provisioned document must serve the corrected text). */
-  private def mainPayload(sfDir: String, mainDir: Option[String],
-                          ids: Seq[Long]): DataFrame = {
-    val fromDocs = spark.read.parquet(s"$sfDir/documents.parquet")
+  /** The payload reads for MAIN-side hit ids (≤ k — every lookup
+    * reaches parquet as a pushed In filter) as (doc_id, text, _src)
+    * frames, where the lower `_src` wins an id both sources know. On
+    * the session route every main hit is a corpus document. Under a
+    * serving root (`root`) the epoch corpus may CARRY text for rows
+    * folded in from past ingests (the documents table never had them)
+    * — those ids read their payload from the artifact itself, and
+    * where both sources know an id the artifact wins: its row is the
+    * NEWER version by the fold's latest-op-wins construction (a del+put
+    * correction folded over a provisioned document must serve the
+    * corrected text). */
+  private def mainSources(snap: ServingSnapshot, root: Boolean,
+                          ids: Seq[Long]): Seq[DataFrame] = {
+    val art = snap.artifact
+    snap.documents
       .filter(col("doc_id").isin(ids: _*))
-      .select($"doc_id", $"text")
-    mainDir match {
-      case None => fromDocs
-      case Some(m) =>
-        val art = spark.read.parquet(s"$m/corpus")
-        if (!art.columns.contains("text") || ids.isEmpty) fromDocs
-        else {
-          val fromArt = art
-            .filter(col("text").isNotNull && col("vec_id").isin(ids: _*))
-            .select(col("vec_id").as("doc_id"), $"text")
-          // ≤ k-id point lookup: which hits the artifact itself serves
-          val artIds = fromArt.select($"doc_id").collect().map(_.getLong(0))
-          if (artIds.isEmpty) fromDocs
-          else fromDocs.filter(!col("doc_id").isin(artIds.toIndexedSeq: _*))
-            .unionByName(fromArt)
-        }
-    }
+      .select($"doc_id", $"text", lit(2).as("_src")) +:
+    Seq(art).filter(_ => root && art.columns.contains("text")).map(_
+      .filter(col("text").isNotNull && col("vec_id").isin(ids: _*))
+      .select(col("vec_id").as("doc_id"), $"text", lit(1).as("_src")))
+  }
+
+  /** [[mainSources]] as one (doc_id, text) frame for the DataFrame
+    * face: the ids the artifact serves are collected (a ≤ k-id point
+    * lookup) and the documents read skips them. */
+  private def mainPayload(snap: ServingSnapshot, root: Boolean,
+                          ids: Seq[Long]): DataFrame =
+    (mainSources(snap, root, ids) match {
+      case Seq(docs, art) if ids.nonEmpty =>
+        val artIds = art.select($"doc_id").collect().map(_.getLong(0))
+        if (artIds.isEmpty) docs
+        else docs.filter(!col("doc_id").isin(artIds.toIndexedSeq: _*))
+          .unionByName(art)
+      case sources => sources.head
+    }).drop("_src")
+
+  /** The hit payloads as a driver-side map — [[mainSources]]' rule
+    * plus the delta hits' text from the live delta rows, in ONE
+    * collect of ≤ (main + delta ids) In-filtered point lookups. The
+    * collecting routes' payload step: a plan-side join of the ≤ k hits
+    * would add a broadcast and a range-partitioned sort for a handful
+    * of rows. `mainIds` and `deltaIds` are disjoint (a delta hit is
+    * never a live canonical id), so each id reads only its own side. */
+  private def textOf(snap: ServingSnapshot, root: Boolean, mainIds: Seq[Long],
+                     delta: Option[DataFrame], deltaIds: Seq[Long]): Map[Long, String] = {
+    val sources =
+      (if (mainIds.isEmpty) Nil else mainSources(snap, root, mainIds)) ++
+        delta.filter(_ => deltaIds.nonEmpty).map(_
+          .filter(col("doc_id").isin(deltaIds: _*))
+          .select($"doc_id", $"text", lit(0).as("_src")))
+    if (sources.isEmpty) Map.empty
+    else sources.reduce(_.unionByName(_)).collect()
+      .groupBy(_.getLong(0))
+      .map { case (id, rows) => id -> rows.minBy(_.getInt(2)).getString(1) }
   }
 
   /** The searchable rows: live corpus ∪ (when a delta is named) the
@@ -215,54 +302,71 @@ final class SearchEngine(
     }
   }
 
-  /** The delta's LIVE rows as one id-unique (doc_id, text, embedding,
-    * batch) frame — segments resolved ONCE (snapshot stability), id
-    * twins resolved latest-batch-wins, rows at or below a newer
-    * tombstone dropped (put wins a same-batch tie). None when no
-    * delta is named, the delta is empty, or NO segment carries a
-    * filtered column (then no delta row can match — the schema rule
-    * corpusWithDelta documents). A MIXED-schema delta (a filtered
-    * column present in some segments only — e.g. labels added to
-    * ingests after the first batches) unions with nulls where absent,
-    * and the equality predicate excludes the null rows per ROW: rows
-    * that do carry and match the column still serve — dropping the
-    * whole delta on one schema-lagging segment would be a recall miss. */
+  /** The delta's LIVE rows under `filter` as one id-unique (doc_id,
+    * text, embedding, batch) frame, resolved fresh from the store
+    * (the exact fallback's read — it never consults a serving
+    * snapshot). None when no delta is named, the delta is empty, or
+    * NO segment carries a filtered column (then no delta row can
+    * match — the schema rule corpusWithDelta documents). A
+    * MIXED-schema delta (a filtered column present in some segments
+    * only — e.g. labels added to ingests after the first batches)
+    * unions with nulls where absent, and the equality predicate
+    * excludes the null rows per ROW: rows that do carry and match the
+    * column still serve — dropping the whole delta on one
+    * schema-lagging segment would be a recall miss. */
   private def deltaSegsLww(deltaDir: Option[String],
                            dels: Option[DataFrame],
-                           filter: Seq[(String, Any)] = Nil,
-                           hint: DataFrame => DataFrame = broadcast(_)): Option[DataFrame] = {
+                           filter: Seq[(String, Any)],
+                           hint: DataFrame => DataFrame): Option[DataFrame] = {
     val segs = deltaDir.map(deltaSegs).getOrElse(Nil)
     if (segs.isEmpty ||
         !filter.forall { case (c, _) => segs.exists(_.columns.contains(c)) })
       None
     else {
-      val batchCol = graft.sources.SegmentStore.BatchCol
-      val w = Window.partitionBy(col("doc_id")).orderBy(col(batchCol).desc)
       // filter columns (if any) ride the resolution and the filter
       // applies AFTER latest-wins — a stale matching version must not
       // shadow the current non-matching one
       val carry = filter.map(_._1).distinct
-        .filterNot(Set("doc_id", "text", "embedding", batchCol))
-      val lww = segs
-        .map { seg =>
-          val present = carry.filter(seg.columns.contains)
-          seg.select(Seq(col("vec_id").as("doc_id"), col("text"),
-            col("embedding"), col(batchCol)) ++ present.map(col): _*)
-        }
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .withColumn("_lww_rn", row_number().over(w))
-        .filter(col("_lww_rn") === 1)
-        .drop("_lww_rn")
-      val live = dels match {
-        case None => lww
-        case Some(d) => lww
-          .join(hint(d.select(col("vec_id").as("doc_id"), col("del_batch"))),
-            Seq("doc_id"), "left")
-          .filter(col("del_batch").isNull || col(batchCol) >= col("del_batch"))
-          .drop("del_batch")
-      }
+      val live = lwwLive(segs, carry, dels, hint)
       Some(if (filter.isEmpty) live
-        else live.filter(filterPredicate(filter)).drop(carry: _*))
+        else live.filter(filterPredicate(filter)).drop(carryable(carry): _*))
+    }
+  }
+
+  /** The columns of `cols` a live-delta frame carries beyond its fixed
+    * (doc_id, text, embedding, batch) shape. */
+  private def carryable(cols: Seq[String]): Seq[String] =
+    cols.filterNot(Set("doc_id", "text", "embedding",
+      graft.sources.SegmentStore.BatchCol))
+
+  /** THE live-delta rule, shared by the serving snapshot and the exact
+    * fallback: the segments' rows as (doc_id, text, embedding, batch)
+    * plus the `carry` columns they have (null where a segment lacks
+    * one), id twins resolved latest-batch-wins, rows at or below a
+    * newer tombstone (`lastDel`: vec_id, del_batch) dropped — put wins
+    * a same-batch tie. */
+  private def lwwLive(segs: Seq[DataFrame], carry: Seq[String],
+                      lastDel: Option[DataFrame],
+                      hint: DataFrame => DataFrame): DataFrame = {
+    val batchCol = graft.sources.SegmentStore.BatchCol
+    val w = Window.partitionBy(col("doc_id")).orderBy(col(batchCol).desc)
+    val lww = segs
+      .map { seg =>
+        val present = carryable(carry).filter(seg.columns.contains)
+        seg.select(Seq(col("vec_id").as("doc_id"), col("text"),
+          col("embedding"), col(batchCol)) ++ present.map(col): _*)
+      }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+      .withColumn("_lww_rn", row_number().over(w))
+      .filter(col("_lww_rn") === 1)
+      .drop("_lww_rn")
+    lastDel match {
+      case None => lww
+      case Some(d) => lww
+        .join(hint(d.select(col("vec_id").as("doc_id"), col("del_batch"))),
+          Seq("doc_id"), "left")
+        .filter(col("del_batch").isNull || col(batchCol) >= col("del_batch"))
+        .drop("del_batch")
     }
   }
 
@@ -275,6 +379,60 @@ final class SearchEngine(
       spark.sparkContext.hadoopConfiguration)
     graft.sources.SegmentStore.segments(fs, deltaDir)
       .map(spark.read.parquet(_))
+  }
+
+  /** The serving snapshot of (documents, artifact `main`, delta),
+    * resolved from filesystem metadata alone: the key is the FULL
+    * listing — documents table, artifact, every committed delta and
+    * tombstone segment path — so an ingest, a compaction or an epoch
+    * swap each resolve a fresh snapshot. The store is the serving
+    * root for an epoch artifact (`root` — an epoch swap replaces the
+    * root's one entry) and the (corpus, delta) pair otherwise. A new
+    * snapshot carries over from its predecessor the relations of
+    * paths still listed, the tombstone ids while the tombstone
+    * listing is unchanged, and the live delta while the delta and
+    * tombstone listings both are. */
+  private def snapshot(sfDir: String, main: String, deltaDir: Option[String],
+                       root: Boolean): ServingSnapshot = {
+    import graft.sources.SegmentStore
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val docsPath = s"$sfDir/documents.parquet"
+    val artPath = s"$main/corpus"
+    val segs = deltaDir.map(SegmentStore.segments(fs, _)).getOrElse(Nil)
+    val tombs = deltaDir.map(d => SegmentStore.segments(fs, s"$d/tombstones"))
+      .getOrElse(Nil)
+    val store =
+      if (root) new org.apache.hadoop.fs.Path(main).getParent.toString
+      else s"$sfDir|${deltaDir.getOrElse("")}"
+    val listing = s"$docsPath|$artPath|delta=${segs.mkString(",")}" +
+      s"|tombstones=${tombs.mkString(",")}"
+    snapshots.getOrReplace(spark, store, listing) { prev =>
+      val relations = (Seq(docsPath, artPath) ++ segs ++ tombs).map { p =>
+        p -> prev.flatMap(_.relations.get(p)).getOrElse(spark.read.parquet(p))
+      }.toMap
+      val segFrames = segs.map(relations)
+      val deltaColumns = segFrames.flatMap(_.columns).toSet
+      val sameTombs = prev.filter(_.tombPaths == tombs)
+      val tombRows =
+        if (tombs.isEmpty) None
+        else Some(tombs.map(relations).reduce(_.unionByName(_)))
+      val hint = sameTombs.map(_.tombstoneHint).getOrElse(
+        if (tombs.isEmpty) identity[DataFrame] _
+        else AnnIndex.tombstoneHint(fs, tombs))
+      val live = sameTombs.filter(_.segPaths == segs) match {
+        case Some(p) => p.liveDelta
+        case None => Option.when(segs.nonEmpty)(
+          lwwLive(segFrames, deltaColumns.toSeq.sorted,
+            tombRows.map(AnnIndex.lastDeletes), hint).persist())
+      }
+      val tombstoneIds = sameTombs match {
+        case Some(p) => p.tombstoneIds
+        case None => tombRows.map(_.select(col("vec_id")).distinct().persist())
+      }
+      new ServingSnapshot(relations, segs, tombs, relations(docsPath),
+        relations(artPath), deltaColumns, live, tombstoneIds, hint)
+    }
   }
 
   /** The session IVF-PQ artifact serving this corpus — the SAME
@@ -321,6 +479,58 @@ final class SearchEngine(
                     deltaDir: Option[String] = None,
                     filter: Seq[(String, Any)] = Nil,
                     mainDir: Option[String] = None): DataFrame = {
+    val r = rankIndexed(sfDir, prompt, k, nProbe, shortlist, deltaDir,
+      filter, mainDir)
+    val scores = r.hits.toDF("doc_id", "score")
+    val corpusPayload = mainPayload(r.snap, mainDir.isDefined, r.mainIds)
+    // delta docs are NOT in the corpus parquet — their payload rides
+    // the delta segments themselves (encodeSegment carries the ingest
+    // batch's columns through), already id-unique and corpus-disjoint;
+    // the ≤ k texts are read from the snapshot's live rows
+    val payload =
+      if (r.deltaIds.isEmpty) corpusPayload
+      else corpusPayload.unionByName(
+        textOf(r.snap, root = false, Nil, r.delta, r.deltaIds).toSeq
+          .toDF("doc_id", "text"))
+    // the inner join drops a merged hit whose payload exists NOWHERE
+    // (artifact without a text column AND absent from the documents
+    // table) — such a result serves under-k rather than fabricating a
+    // payload; the collecting routes' textOf merge applies the same
+    // rule, so every face agrees on this edge too
+    payload
+      .join(broadcast(scores), Seq("doc_id"))
+      .orderBy(desc("score"), asc("doc_id"))
+      .select($"doc_id", $"text", $"score")
+  }
+
+  /** [[searchIndexed]]'s answer collected for the tool surface: the
+    * same ranking, with the payload step as the batch route's
+    * driver-side [[textOf]] merge (one ≤ k-id point-lookup collect)
+    * instead of a plan-side join and sort of ≤ k rows. */
+  private def searchIndexedHits(sfDir: String, prompt: String, k: Int,
+                                deltaDir: Option[String],
+                                filter: Seq[(String, Any)],
+                                mainDir: Option[String]): Array[SearchHit] = {
+    val r = rankIndexed(sfDir, prompt, k,
+      graft.queries.AnnQueries.IvfNProbe, graft.queries.AnnQueries.ServedShortlist,
+      deltaDir, filter, mainDir)
+    val text = textOf(r.snap, mainDir.isDefined, r.mainIds, r.delta, r.deltaIds)
+    r.hits.flatMap { case (id, score) => text.get(id).map(SearchHit(id, _, score)) }
+      .toArray
+  }
+
+  /** One served prompt's ranked (doc_id, score) hits, ≤ k, in (score
+    * desc, doc_id asc) order, with the snapshot and filtered live
+    * delta they were ranked against (the payload step reads the
+    * same). */
+  private final class Ranked(val snap: ServingSnapshot, val delta: Option[DataFrame],
+                             val hits: Seq[(Long, Double)], val mainIds: Seq[Long],
+                             val deltaIds: Seq[Long])
+
+  private def rankIndexed(sfDir: String, prompt: String, k: Int, nProbe: Int,
+                          shortlist: Int, deltaDir: Option[String],
+                          filter: Seq[(String, Any)],
+                          mainDir: Option[String]): Ranked = {
     // the payload fetch and the driver merge are O(k): an unbounded
     // caller-supplied k would build an arbitrarily large In literal
     // list and driver row set — fail the request loudly instead (the
@@ -340,8 +550,8 @@ final class SearchEngine(
     // collisions inside the delta resolve latest-batch-wins and
     // tombstoned rows are dropped (the lifecycle rules corpusWithDelta
     // documents — both routes share them)
-    val dels = deltaDir.flatMap(d => graft.search.AnnIndex.tombstones(spark, d))
-    val delta = deltaSegsLww(deltaDir, dels, filter)
+    val snap = snapshot(sfDir, main, deltaDir, root = mainDir.isDefined)
+    val delta = snap.delta(filter)
     // the EVOLVING-index route is q150's main+delta read: the main
     // artifact is PROBED (cell pruning, ADC shortlist, exact rescore)
     // and the delta is EXACT-SCANNED in full — q150's documented rule
@@ -355,68 +565,32 @@ final class SearchEngine(
     // over union, so the ≤ 2k-row driver merge is exact. (The 500 k
     // ingest probe certifies the route end to end — SCALING.md
     // round-13.)
-    // tombstoned ids are excluded INSIDE the probe's scans (broadcast
+    // tombstoned ids are excluded INSIDE the probe's scans (size-gated
     // anti-join before any ranking), so the main top-k back-fills with
     // live rows exactly — a deleted document is unserved, not a hole
     val mainHits = graft.search.AnnIndex
       .probeIvfPq(spark, main, qv, k, nProbe, shortlist,
-        predicate = filterPredicate(filter), exclude = dels)
+        predicate = filterPredicate(filter),
+        exclude = snap.tombstoneIds.map(snap.tombstoneHint),
+        artifact = Some(snap.artifact))
       .collect() // ≤ k rows — the bounded driver merge every top-k ends in
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // delta side: exact top-k over delta \ corpus-ids — the corpus is
     // CANONICAL on an id collision, exactly like the exact route's
     // anti-join (corpusWithDelta), so the fallback really is "slower,
-    // never wronger". Rather than anti-joining the full corpus per
-    // serve, membership is checked with bounded point lookups on the
-    // candidate top-k's ids (a PushedFilter In, like the payload
-    // fetch); a hit excludes those ids and retries — one pass when no
-    // id collides (the common case: ingest ids are fresh), each extra
-    // pass costs one scan of the small delta. The pass cap bounds the
-    // pathological all-collisions delta; the served entry point
-    // degrades to the exact scan on the loud failure.
+    // never wronger" ([[deltaTopK]])
     val deltaHits: Seq[(Long, Double)] = delta match {
       case None => Nil
       case Some(d) =>
-        // collision canonicity is judged against the FILTERED live
-        // corpus (corpusWithDelta's anti-join target): a corpus id
-        // outside the filter does not block a matching delta row
-        val docs = canonicalIds(sfDir, mainDir, filter)
-        var excluded = Set.empty[Long]
-        var out: Option[Seq[(Long, Double)]] = None
-        var passes = 0
-        while (out.isEmpty) {
-          passes += 1
-          if (passes > SearchEngine.MaxCollisionPasses)
-            throw new IllegalStateException(
-              s"delta top-$k still colliding with corpus ids after " +
-                s"${SearchEngine.MaxCollisionPasses} passes (${excluded.size} excluded)")
-          val base = if (excluded.isEmpty) d
-            else d.filter(!col("doc_id").isin(excluded.toSeq: _*))
-          val top = base
+        deltaTopK(d, canonicalIds(sfDir, snap, mainDir.isDefined, filter),
+            snap.tombstoneIds, s"delta top-$k") { base =>
+          base
             .withColumn("score", round(neo4jScore(col("embedding"), typedLit(qv.toSeq)), 6))
             .orderBy(desc("score"), asc("doc_id"))
             .limit(k)
             .select($"doc_id", $"score")
             .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-          // a collision means the id belongs to a LIVE corpus document
-          // (canonical) — a DELETED corpus id is fair game for the
-          // delta, that's the del+put correction flow; both checks are
-          // ≤ k-id point lookups
-          val inCorpus =
-            if (top.isEmpty) Set.empty[Long]
-            else docs.filter(col("doc_id").isin(top.map(_._1): _*))
-              .select($"doc_id").collect().map(_.getLong(0)).toSet
-          val deleted =
-            if (inCorpus.isEmpty) Set.empty[Long]
-            else dels match {
-              case None => Set.empty[Long]
-              case Some(d) => d.filter(col("vec_id").isin(inCorpus.toSeq: _*))
-                .select($"vec_id").collect().map(_.getLong(0)).toSet
-            }
-          val collided = inCorpus -- deleted
-          if (collided.isEmpty) out = Some(top) else excluded ++= collided
-        }
-        out.get
+        }(_._1)
     }
     // mainHits' ids live in the corpus, deltaHits' ids provably do not
     // — the sets are disjoint and each is id-unique, so the merge is a
@@ -424,29 +598,52 @@ final class SearchEngine(
     val hits = (mainHits ++ deltaHits)
       .sortBy { case (id, score) => (-score, id) }
       .take(k)
-    val scores = hits.toDF("doc_id", "score")
-    val corpusPayload = mainPayload(sfDir, mainDir, mainHits.map(_._1))
-    // delta docs are NOT in the corpus parquet — their payload rides
-    // the delta segments themselves (encodeSegment carries the ingest
-    // batch's columns through), already id-unique and corpus-disjoint
-    val payload = delta match {
-      case None => corpusPayload
-      case Some(d) =>
-        val deltaIds = deltaHits.map(_._1)
-        if (deltaIds.isEmpty) corpusPayload
-        else corpusPayload.unionByName(
-          d.filter(col("doc_id").isin(deltaIds: _*))
-            .select($"doc_id", $"text"))
+    new Ranked(snap, delta, hits, mainHits.map(_._1), deltaHits.map(_._1))
+  }
+
+  /** The delta side's top-k under corpus-canonical collision
+    * exclusion, shared by the single and batched routes. Rather than
+    * anti-joining the full canonical set per serve, membership is
+    * checked with bounded point lookups on the candidate top-k's ids
+    * (a PushedFilter In, like the payload fetch); a hit excludes those
+    * ids and `top` reruns — one pass when no id collides (the common
+    * case: ingest ids are fresh), each extra pass costs one scan of
+    * the small delta. A collision means the id belongs to a LIVE
+    * canonical document — a DELETED canonical id is fair game for the
+    * delta, that's the del+put correction flow. The pass cap bounds
+    * the pathological all-collisions delta; the served entry points
+    * degrade to the exact scan on the loud failure. */
+  private def deltaTopK[T](delta: DataFrame, canonical: DataFrame,
+                           tombstoneIds: Option[DataFrame], what: String)
+                          (top: DataFrame => Seq[T])(idOf: T => Long): Seq[T] = {
+    var excluded = Set.empty[Long]
+    var out: Option[Seq[T]] = None
+    var passes = 0
+    while (out.isEmpty) {
+      passes += 1
+      if (passes > SearchEngine.MaxCollisionPasses)
+        throw new IllegalStateException(
+          s"$what still colliding with canonical ids after " +
+            s"${SearchEngine.MaxCollisionPasses} passes (${excluded.size} excluded)")
+      val found = top(if (excluded.isEmpty) delta
+        else delta.filter(!col("doc_id").isin(excluded.toIndexedSeq: _*)))
+      val ids = found.map(idOf).distinct
+      // both checks are ≤ k-id point lookups
+      val inCanon =
+        if (ids.isEmpty) Set.empty[Long]
+        else canonical.filter(col("doc_id").isin(ids: _*))
+          .select($"doc_id").collect().map(_.getLong(0)).toSet
+      val deleted =
+        if (inCanon.isEmpty) Set.empty[Long]
+        else tombstoneIds match {
+          case None => Set.empty[Long]
+          case Some(t) => t.filter(col("vec_id").isin(inCanon.toIndexedSeq: _*))
+            .collect().map(_.getLong(0)).toSet
+        }
+      val collided = inCanon -- deleted
+      if (collided.isEmpty) out = Some(found) else excluded ++= collided
     }
-    // the inner join drops a merged hit whose payload exists NOWHERE
-    // (artifact without a text column AND absent from the documents
-    // table) — such a result serves under-k rather than fabricating a
-    // payload; the batch route's final merge applies the same rule, so
-    // batch == per-prompt holds on this edge too
-    payload
-      .join(broadcast(scores), Seq("doc_id"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .select($"doc_id", $"text", $"score")
+    out.get
   }
 
   /** Streaming DOCUMENT ingest that keeps the SERVED index current —
@@ -576,8 +773,7 @@ final class SearchEngine(
     require(k >= 1 && k <= SearchEngine.MaxServedK,
       s"served k must be in [1, ${SearchEngine.MaxServedK}], got $k")
     renderHits(
-      try searchIndexed(sfDir, prompt, k,
-          deltaDir = deltaDir, filter = filter).as[SearchHit].collect()
+      try searchIndexedHits(sfDir, prompt, k, deltaDir, filter, mainDir = None)
       catch {
         case scala.util.control.NonFatal(e) =>
           indexFallbackCount.incrementAndGet()
@@ -621,8 +817,7 @@ final class SearchEngine(
     renderHits(
       try {
         val (idx, delta) = graft.search.AnnIndex.ServingRoot.resolve(spark, rootDir)
-        searchIndexed(sfDir, prompt, k, deltaDir = Some(delta),
-          filter = filter, mainDir = Some(idx)).as[SearchHit].collect()
+        searchIndexedHits(sfDir, prompt, k, Some(delta), filter, Some(idx))
       } catch {
         case scala.util.control.NonFatal(e) =>
           indexFallbackCount.incrementAndGet()
@@ -640,7 +835,7 @@ final class SearchEngine(
     * [[corpusWithDelta]] rule). Text back-fills from the documents
     * table for artifact rows that predate any ingest (their payload
     * never rode the index). */
-  private def exactRootHits(sfDir: String, rootDir: String, qv: Array[Float],
+  private[graft] def exactRootHits(sfDir: String, rootDir: String, qv: Array[Float],
                             k: Int, filter: Seq[(String, Any)]): Array[SearchHit] = {
     val (idx, delta) = graft.search.AnnIndex.ServingRoot.resolve(spark, rootDir)
     exactLiveHits(sfDir, idx, Some(delta), qv, k, filter)
@@ -714,42 +909,27 @@ final class SearchEngine(
       deltaDir: Option[String] = None,
       filter: Seq[(String, Any)] = Nil,
       mainDir: Option[String] = None): Seq[Seq[SearchHit]] = {
-    require(k >= 1 && k <= SearchEngine.MaxServedK,
-      s"served k must be in [1, ${SearchEngine.MaxServedK}], got $k")
-    require(prompts.nonEmpty && prompts.size <= SearchEngine.MaxBatchPrompts,
-      s"batch must carry 1..${SearchEngine.MaxBatchPrompts} prompts, got ${prompts.size}")
-    val dels = deltaDir.flatMap(d => graft.search.AnnIndex.tombstones(spark, d))
-    val queries = prompts.zipWithIndex
-      .map { case (p, i) => (i.toLong, embedder.embed(p).toSeq) }
-      .toDF("vec_id", "embedding")
+    requireBatch(prompts, k)
+    val main = mainDir.getOrElse(indexDir(sfDir))
+    val snap = snapshot(sfDir, main, deltaDir, root = mainDir.isDefined)
+    val queries = queryFrame(prompts)
     val mainHits =
-      batchMainProbeFrame(sfDir, prompts, k, nProbe, shortlist, deltaDir,
-        filter, mainDir)
+      batchProbe(snap, main, queries, k, nProbe, shortlist, filter)
       .collect() // ≤ prompts·k rows
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // DELTA: one exact pass scores every live delta row against every
     // query (queries broadcast — ≤ MaxBatchPrompts rows); collision
     // canonicity is the per-prompt loop's rule, batched: candidate ids
     // that are LIVE canonical ids are excluded and the scan retries
-    val delta = deltaSegsLww(deltaDir, dels, filter)
+    val delta = snap.delta(filter)
     val deltaHits: Seq[(Long, Long, Double)] = delta match {
       case None => Nil
       case Some(d) =>
-        val docs = canonicalIds(sfDir, mainDir, filter)
         val qside = broadcast(queries
           .select($"vec_id".as("query_id"), $"embedding".as("qe")))
-        var excluded = Set.empty[Long]
-        var out: Option[Seq[(Long, Long, Double)]] = None
-        var passes = 0
-        while (out.isEmpty) {
-          passes += 1
-          if (passes > SearchEngine.MaxCollisionPasses)
-            throw new IllegalStateException(
-              s"batched delta top-$k still colliding with canonical ids after " +
-                s"${SearchEngine.MaxCollisionPasses} passes (${excluded.size} excluded)")
-          val base = if (excluded.isEmpty) d
-            else d.filter(!col("doc_id").isin(excluded.toIndexedSeq: _*))
-          val top = base.crossJoin(qside)
+        deltaTopK(d, canonicalIds(sfDir, snap, mainDir.isDefined, filter),
+            snap.tombstoneIds, s"batched delta top-$k") { base =>
+          base.crossJoin(qside)
             .withColumn("score",
               round(neo4jScore(col("embedding"), col("qe")), 6))
             .groupBy($"query_id")
@@ -759,23 +939,7 @@ final class SearchEngine(
             .select($"query_id", $"hit.id".as("doc_id"), $"hit.score".as("score"))
             .collect() // ≤ prompts·k rows
             .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-          val ids = top.map(_._2).distinct
-          val inCanon =
-            if (ids.isEmpty) Set.empty[Long]
-            else docs.filter(col("doc_id").isin(ids: _*))
-              .select($"doc_id").collect().map(_.getLong(0)).toSet
-          val deleted =
-            if (inCanon.isEmpty) Set.empty[Long]
-            else dels match {
-              case None => Set.empty[Long]
-              case Some(dd) => dd
-                .filter(col("vec_id").isin(inCanon.toIndexedSeq: _*))
-                .select($"vec_id").collect().map(_.getLong(0)).toSet
-            }
-          val collided = inCanon -- deleted
-          if (collided.isEmpty) out = Some(top) else excluded ++= collided
-        }
-        out.get
+        }(_._2)
     }
     // merge per query (the per-prompt route's ≤ 2k driver merge,
     // batched) and fetch payloads once for the union of hit ids —
@@ -795,27 +959,29 @@ final class SearchEngine(
     val mainIdSet = mainHits.map(_._2).toSet
     val deltaIdSet = deltaHits.map(_._2).toSet
     val mergedIds = merged.flatten.map(_._1).distinct
-    val mainIds = mergedIds.filter(mainIdSet)
-    val deltaIds = mergedIds.filter(deltaIdSet)
-    val textOf: Map[Long, String] = {
-      val fromMain = mainPayload(sfDir, mainDir, mainIds)
-        .collect().map(r => r.getLong(0) -> r.getString(1))
-      val fromDelta = delta match {
-        case Some(d) if deltaIds.nonEmpty =>
-          d.filter(col("doc_id").isin(deltaIds: _*))
-            .select($"doc_id", $"text").collect()
-            .map(r => r.getLong(0) -> r.getString(1))
-        case _ => Array.empty[(Long, String)]
-      }
-      (fromMain ++ fromDelta).toMap
-    }
+    val text = textOf(snap, mainDir.isDefined, mergedIds.filter(mainIdSet),
+      delta, mergedIds.filter(deltaIdSet))
     // a merged hit with no payload anywhere is dropped below k — the
-    // per-prompt route's inner-join rule exactly (see searchIndexed's
-    // final join), keeping batch == per-prompt on this edge
+    // per-prompt route's rule exactly (see searchIndexed's final
+    // join), keeping batch == per-prompt on this edge
     merged.map(_.flatMap { case (id, score) =>
-      textOf.get(id).map(SearchHit(id, _, score))
-    }.toSeq)
+      text.get(id).map(SearchHit(id, _, score))
+    })
   }
+
+  /** The batch caps every batched entry point enforces. */
+  private def requireBatch(prompts: Seq[String], k: Int): Unit = {
+    require(k >= 1 && k <= SearchEngine.MaxServedK,
+      s"served k must be in [1, ${SearchEngine.MaxServedK}], got $k")
+    require(prompts.nonEmpty && prompts.size <= SearchEngine.MaxBatchPrompts,
+      s"batch must carry 1..${SearchEngine.MaxBatchPrompts} prompts, got ${prompts.size}")
+  }
+
+  /** The prompt batch as (vec_id = prompt index, embedding). */
+  private def queryFrame(prompts: Seq[String]): DataFrame =
+    prompts.zipWithIndex
+      .map { case (p, i) => (i.toLong, embedder.embed(p).toSeq) }
+      .toDF("vec_id", "embedding")
 
   /** The batched route's MAIN-side probe frame — built, NOT collected:
     * ONE [[graft.search.AnnIndex.probeIvfPqSegmentsMulti]] plan serves
@@ -836,27 +1002,22 @@ final class SearchEngine(
     // the same caps the collecting route enforces — this entry point
     // is public (the plan-pin seam), so a direct caller must not be
     // able to build an unbounded query broadcast either
-    require(k >= 1 && k <= SearchEngine.MaxServedK,
-      s"served k must be in [1, ${SearchEngine.MaxServedK}], got $k")
-    require(prompts.nonEmpty && prompts.size <= SearchEngine.MaxBatchPrompts,
-      s"batch must carry 1..${SearchEngine.MaxBatchPrompts} prompts, got ${prompts.size}")
+    requireBatch(prompts, k)
     val main = mainDir.getOrElse(indexDir(sfDir))
-    val dels = deltaDir.flatMap(d => graft.search.AnnIndex.tombstones(spark, d))
-    val hint: DataFrame => DataFrame = deltaDir match {
-      case Some(d) if dels.isDefined =>
-        graft.search.AnnIndex.tombstoneHint(spark, d)
-      case _ => identity
-    }
-    val queries = prompts.zipWithIndex
-      .map { case (p, i) => (i.toLong, embedder.embed(p).toSeq) }
-      .toDF("vec_id", "embedding")
-    val art = spark.read.parquet(s"$main/corpus")
+    batchProbe(snapshot(sfDir, main, deltaDir, root = mainDir.isDefined),
+      main, queryFrame(prompts), k, nProbe, shortlist, filter)
+  }
+
+  private def batchProbe(snap: ServingSnapshot, main: String, queries: DataFrame,
+                         k: Int, nProbe: Int, shortlist: Int,
+                         filter: Seq[(String, Any)]): DataFrame = {
+    val art = snap.artifact
     val artFiltered =
       if (filter.isEmpty) art else art.filter(filterPredicate(filter))
-    val mainFrame = dels match {
+    val mainFrame = snap.tombstoneIds match {
       case None => artFiltered
-      case Some(d) => artFiltered
-        .join(hint(d.select(col("vec_id"))), Seq("vec_id"), "left_anti")
+      case Some(t) =>
+        artFiltered.join(snap.tombstoneHint(t), Seq("vec_id"), "left_anti")
     }
     graft.search.AnnIndex
       .probeIvfPqSegmentsMulti(spark, main, Seq(mainFrame), queries,
@@ -881,10 +1042,7 @@ final class SearchEngine(
       deltaDir: Option[String] = None,
       filter: Seq[(String, Any)] = Nil,
       mainDir: Option[String] = None): String = {
-    require(k >= 1 && k <= SearchEngine.MaxServedK,
-      s"served k must be in [1, ${SearchEngine.MaxServedK}], got $k")
-    require(prompts.nonEmpty && prompts.size <= SearchEngine.MaxBatchPrompts,
-      s"batch must carry 1..${SearchEngine.MaxBatchPrompts} prompts, got ${prompts.size}")
+    requireBatch(prompts, k)
     renderBatch(
       try searchIndexedBatch(sfDir, prompts, k,
         deltaDir = deltaDir, filter = filter, mainDir = mainDir)
@@ -910,10 +1068,7 @@ final class SearchEngine(
   def searchJsonBatchRoot(sfDir: String, rootDir: String,
       prompts: Seq[String], k: Int = 10,
       filter: Seq[(String, Any)] = Nil): String = {
-    require(k >= 1 && k <= SearchEngine.MaxServedK,
-      s"served k must be in [1, ${SearchEngine.MaxServedK}], got $k")
-    require(prompts.nonEmpty && prompts.size <= SearchEngine.MaxBatchPrompts,
-      s"batch must carry 1..${SearchEngine.MaxBatchPrompts} prompts, got ${prompts.size}")
+    requireBatch(prompts, k)
     // same loud-over-degraded contract as the single root route
     graft.search.AnnIndex.ServingRoot.requireEmbedder(
       org.apache.hadoop.fs.FileSystem.get(
@@ -934,7 +1089,7 @@ final class SearchEngine(
       })
   }
 
-  private def renderBatch(all: Seq[Seq[SearchHit]]): String =
+  private[graft] def renderBatch(all: Seq[Seq[SearchHit]]): String =
     all.map(hits => hits.map(h =>
         s"""{"doc_id":${h.doc_id},"text":${jsonQuote(h.text)},"score":${h.score}}""")
       .mkString("[", ", ", "]")).mkString("[", ", ", "]")
@@ -948,7 +1103,7 @@ final class SearchEngine(
                  filter: Seq[(String, Any)] = Nil): String =
     renderHits(search(sfDir, prompt, k, deltaDir, filter).collect())
 
-  private def renderHits(hits: Array[SearchHit]): String =
+  private[graft] def renderHits(hits: Array[SearchHit]): String =
     if (hits.isEmpty) "No results found."
     else hits.map(h =>
       s"""{"doc_id":${h.doc_id},"text":${jsonQuote(h.text)},"score":${h.score}}""")

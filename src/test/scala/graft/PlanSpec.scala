@@ -1435,4 +1435,77 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(gens.size === 1,
       s"every scan must read the one resolved epoch, got: $gens")
   }
+
+  test("served routes withhold the tombstone broadcast past TombstoneBroadcastMaxBytes") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    import org.apache.spark.sql.functions.{col, xxhash64}
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import spark.implicits._
+    val mainDir = graft.queries.AnnQueries.ivfPqIndexDir(spark, sf001)
+    val deltaDir = java.nio.file.Files
+      .createTempDirectory("graft_tombstone_ceiling_spec").toString
+    // ~4 M scattered ids (hashed over the 64-bit range: no run or
+    // dictionary compresses them) put the store's raw bytes past the
+    // ceiling; a live put gives the delta side a tombstone shadow
+    AnnIndex.appendTombstones(spark, deltaDir,
+      spark.range(4000000L).select(xxhash64(col("id")).as("vec_id")),
+      0L, compactEvery = 0)
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    assert(fs.getContentSummary(new org.apache.hadoop.fs.Path(s"$deltaDir/tombstones"))
+      .getLength > AnnIndex.TombstoneBroadcastMaxBytes)
+    def emb(t: String) = new HashingEmbedder(64).embed(t).toSeq
+    AnnIndex.appendDeltaBatch(spark, mainDir, deltaDir,
+      Seq((980000001L, emb("ceiling spec alpha"), "ceiling spec alpha"))
+        .toDF("vec_id", "embedding", "text"), 1L, compactEvery = 0)
+    // every plan the served routes execute, in full: AQE stages, reused
+    // exchanges and the plans behind cached relations
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children ++ p.subqueries
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    def isTombstoneScan(p: SparkPlan): Boolean = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.toString.contains("/tombstones/"))
+      case _ => false
+    }
+    // a broadcast relation IS the tombstone set when its subtree reaches
+    // a tombstone scan without crossing a join (a broadcast shortlist
+    // that was anti-joined against the tombstones further down is not)
+    def isTombstoneSet(p: SparkPlan): Boolean = isTombstoneScan(p) || (p match {
+      case _: org.apache.spark.sql.execution.joins.BaseJoinExec => false
+      case _ => kids(p).exists(isTombstoneSet)
+    })
+    val eng = new graft.search.SearchEngine(spark)
+    spark.listenerManager.register(listener)
+    try {
+      eng.searchIndexed(sf001, "ceiling spec alpha", 10, deltaDir = Some(deltaDir)).collect()
+      eng.searchIndexedBatch(sf001, Seq("ceiling spec alpha", "fast hash join"), 10,
+        deltaDir = Some(deltaDir))
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    assert(all.flatMap(nodes).exists(isTombstoneScan),
+      "the served routes must read the tombstone store")
+    val broadcastTombstones = all.flatMap(nodes).collect {
+      case b: BroadcastExchangeExec if isTombstoneSet(b) => b
+    }
+    assert(broadcastTombstones.isEmpty,
+      s"past the ceiling no BroadcastExchange may sit on the tombstone side:\n" +
+        broadcastTombstones.map(_.treeString).mkString("\n"))
+  }
 }

@@ -1021,4 +1021,134 @@ class SearchEngineSpec extends SparkSpec {
     assert(AnnIndex.readEpochStats(spark, idx1).isDefined,
       "refit must persist the fresh epoch's stats")
   }
+
+  test("serving snapshot reuse changes no answer: warm == fresh engine == exact fallback across the root lifecycle") {
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    val mainDir = AnnQueries.ivfPqIndexDir(spark, sf0001)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_snapshot_spec").toString + "/r"
+    ServingRoot.init(spark, mainDir, root)
+    val warm = new SearchEngine(spark)
+    def emb(t: String) = new HashingEmbedder(64).embed(t).toSeq
+    def put(rows: Seq[(Long, String)], b: Long): Unit = {
+      val (idx, delta) = ServingRoot.resolve(spark, root)
+      AnnIndex.appendDeltaBatch(spark, idx, delta,
+        rows.map { case (i, t) => (i, emb(t), t, AnnQueries.FilterLabel) }
+          .toDF("vec_id", "embedding", "text", "label"), b, compactEvery = 2)
+    }
+    def del(ids: Seq[Long], b: Long): Unit =
+      AnnIndex.appendTombstones(spark, ServingRoot.resolve(spark, root)._2,
+        ids.toDF("vec_id"), b, compactEvery = 2)
+    val prompts = Seq(AnnQueries.ServedPrompt, "snapshot spec alpha",
+      "snapshot spec gamma corrected")
+    val filters = Seq(Nil, Seq("label" -> (AnnQueries.FilterLabel: Any)))
+    val appId = spark.sparkContext.applicationId
+    // the warm engine's first call of a step replaces the previous
+    // step's snapshot (carrying over what the new listing still
+    // names) and every later call reads it; the fresh engine answers
+    // after the memo is dropped, from a snapshot resolved cold
+    def check(step: String): Unit = for (filter <- filters) {
+      val w = prompts.map(p => warm.searchJsonRoot(sf0001, root, p, 8, filter))
+      val wb = warm.searchJsonBatchRoot(sf0001, root, prompts, 8, filter)
+      val stores = SearchEngine.snapshots.entryCount(appId)
+      SearchEngine.snapshots.evict(appId)
+      val fresh = new SearchEngine(spark)
+      def exact(p: String) =
+        fresh.exactRootHits(sf0001, root, fresh.embedder.embed(p), 8, filter)
+      for ((p, wp) <- prompts.zip(w)) {
+        assert(wp === fresh.searchJsonRoot(sf0001, root, p, 8, filter),
+          s"$step: warm != fresh engine for '$p' (filter=$filter)")
+        assert(wp === fresh.renderHits(exact(p)),
+          s"$step: warm != exact fallback for '$p' (filter=$filter)")
+      }
+      assert(wb === fresh.searchJsonBatchRoot(sf0001, root, prompts, 8, filter),
+        s"$step: warm batch != fresh engine batch (filter=$filter)")
+      assert(wb === fresh.renderBatch(prompts.map(p => exact(p).toSeq)),
+        s"$step: warm batch != exact fallback (filter=$filter)")
+      assert(SearchEngine.snapshots.entryCount(appId) === 1,
+        s"$step: one snapshot per served root ($stores before the drop)")
+    }
+    check("epoch 0, empty delta")
+    put(Seq(960000001L -> "snapshot spec alpha", 960000002L -> "snapshot spec beta",
+      960000003L -> "snapshot spec gamma draft"), 0L)
+    check("put")
+    del(Seq(5L, 960000002L), 1L)
+    check("delete (corpus doc + ingested doc)")
+    del(Seq(960000003L), 2L)
+    put(Seq(960000003L -> "snapshot spec gamma corrected"), 2L)
+    check("del+put correction")
+    put(Seq(960000004L -> "snapshot spec delta fold"), 3L)
+    check("minor compaction")
+    assert(new java.io.File(ServingRoot.resolve(spark, root)._2 + "/manifest_g0").exists,
+      "batch 3 must have compacted the delta")
+    assert(AnnIndex.majorFoldPublish(spark, root) === 1L)
+    check("majorFoldPublish epoch swap")
+    val served = warm.searchJsonRoot(sf0001, root, "snapshot spec gamma corrected", 8)
+    assert(served.contains("\"doc_id\":960000003,\"text\":\"snapshot spec gamma corrected\""),
+      s"the corrected ingest must serve from the folded epoch: $served")
+    assert(!served.contains("\"doc_id\":960000002,"), served)
+  }
+
+  test("serving snapshots stay bounded across ingests; the exact fallback never needs them") {
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    val mainDir = AnnQueries.ivfPqIndexDir(spark, sf0001)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_snapshot_bound_spec").toString + "/r"
+    ServingRoot.init(spark, mainDir, root)
+    val (idx, delta) = ServingRoot.resolve(spark, root)
+    val eng = new SearchEngine(spark)
+    def emb(t: String) = new HashingEmbedder(64).embed(t).toSeq
+    def put(rows: Seq[(Long, String)], b: Long): Unit =
+      AnnIndex.appendDeltaBatch(spark, idx, delta,
+        rows.map { case (i, t) => (i, emb(t), t) }.toDF("vec_id", "embedding", "text"),
+        b, compactEvery = 2)
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    // RDDs persisted by anything else in this JVM are left out of the
+    // count (only ids that appear after this point are the engine's)
+    val others = persisted()
+    val appId = spark.sparkContext.applicationId
+    val prompt = "snapshot bound spec doc 3"
+    var afterFirst = -1
+    var stores = -1
+    for (b <- 0L until 10L) {
+      put((0 until 20).map(i => (970000000L + b * 100 + i, s"snapshot bound spec doc $i batch $b")), b)
+      // every other ingest is put-only: its snapshot carries the
+      // tombstone ids over, and they must stay cached
+      if (b % 2 == 0L)
+        AnnIndex.appendTombstones(spark, delta,
+          Seq(970000000L + b * 100, b + 20L).toDF("vec_id"), b, compactEvery = 2)
+      eng.searchJsonRoot(sf0001, root, prompt, 10)
+      eng.searchJsonBatchRoot(sf0001, root, Seq(prompt, AnnQueries.ServedPrompt), 10)
+      val snap = SearchEngine.snapshots.current(appId, root).get
+      for ((what, frame) <- Seq("tombstone ids" -> snap.tombstoneIds,
+                                "live delta" -> snap.liveDelta))
+        assert(frame.get.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+          s"ingest $b: the snapshot's $what must be cached")
+      val own = (persisted() -- others).size
+      if (b == 0L) { afterFirst = own; stores = SearchEngine.snapshots.entryCount(appId) }
+      assert(own === afterFirst,
+        s"ingest $b: the engine's persisted RDDs must not grow ($own vs $afterFirst)")
+      assert(SearchEngine.snapshots.entryCount(appId) === stores,
+        s"ingest $b: one snapshot per served root")
+    }
+    assert(afterFirst > 0, "a served delta with tombstones must hold cached frames")
+    // a forced index-route failure with the snapshot warm: bare re-puts
+    // of LIVE corpus ids whose text IS the prompt outrank every other
+    // delta row, so each collision pass finds only canonical ids and
+    // the route fails loudly past MaxCollisionPasses. Corpus ids stay
+    // canonical on a bare put, so the exact answer is unchanged.
+    val warmAnswer = eng.searchJsonRoot(sf0001, root, prompt, 10)
+    val live = spark.read.parquet(s"$idx/corpus").select($"vec_id").as[Long]
+      .collect().filter(_ >= 30L).sorted.take(100)
+    put(live.map(i => (i, prompt)).toSeq, 10L)
+    val before = eng.indexFallbackCount.get
+    assert(eng.searchJsonRoot(sf0001, root, prompt, 10) === warmAnswer,
+      "the exact fallback must serve the unchanged live answer")
+    assert(eng.indexFallbackCount.get === before + 1,
+      "the collision storm must fail the index route, counted")
+  }
 }

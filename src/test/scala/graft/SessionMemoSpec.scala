@@ -49,6 +49,25 @@ class SessionMemoSpec extends AnyFunSuite with SparkSpec {
     assert(memo.entryCount(appId) === 0)
   }
 
+  test("ListingMemo releases the value a new listing replaces, and only that one") {
+    val released = scala.collection.mutable.Buffer.empty[String]
+    val memo = new ListingMemo[String]((old, next) => released += s"$old=>$next")
+    val appId = spark.sparkContext.applicationId
+    def get(listing: String): String =
+      memo.getOrReplace(spark, "/stores/r", listing) { prev =>
+        s"$listing<-${prev.getOrElse("none")}"
+      }
+    // the first listing has nothing to replace or release
+    assert(get("s0") === "s0<-none" && released.isEmpty)
+    // a hit releases nothing; a new listing sees and releases the old
+    assert(get("s0") === "s0<-none" && released.isEmpty)
+    assert(get("s0;s1") === "s0;s1<-s0<-none")
+    assert(released.toSeq === Seq("s0<-none=>s0;s1<-s0<-none"))
+    assert(memo.entryCount(appId) === 1)
+    assert(memo.current(appId, "/stores/r") === Some("s0;s1<-s0<-none"))
+    SessionMemo.evictApplication(appId)
+  }
+
   test("the fitted-index and bloom memos are hooked to application end") {
     val appId = spark.sparkContext.applicationId
     // populate both module memos through their public routes
