@@ -12,8 +12,10 @@
 # count up from 501, a range kept apart from the seeds used while
 # developing a change. Each checkout builds the
 # engine once (run.py builds on first use); each run's stdout lands in
-# <dir>/runs_base and <dir>/runs_new, and the script ends with the
-# comparison report of `perfbench/compare.py`.
+# <dir>/runs_base and <dir>/runs_new, its progress line on stderr ends
+# with the share of host CPU stolen during the run (run.py's summary),
+# and the script ends with the comparison report of
+# `perfbench/compare.py`.
 set -euo pipefail
 
 if [ $# -lt 3 ] || [ $# -gt 4 ]; then
@@ -42,9 +44,10 @@ checkout "$new_ref" new
 run() { # <side> <seed>
   local out
   out="$dir/runs_$1/${workload}__seed$(printf '%05d' "$2").out"
-  echo "$(date -u +%H:%M:%S) $1 seed $2" >&2
+  printf '%s %s seed %s' "$(date -u +%H:%M:%S)" "$1" "$2" >&2
   (cd "$dir/$1" && python3 perfbench/run.py --workload "$workload" \
     --seed "$2" --seconds 10 --trace 0) > "$out"
+  echo ", $(grep -o 'host CPU stolen [0-9.]*%' "$out" || echo 'host CPU stolen ?')" >&2
 }
 
 for i in $(seq 0 $((pairs - 1))); do

@@ -100,6 +100,37 @@ object SearchEngine {
     * strands nothing. */
   private[graft] val snapshots =
     new graft.ListingMemo[ServingSnapshot](_.releaseAgainst(_))
+
+  /** The thread every served call's MAIN chain runs on ([[overlapped]]):
+    * one daemon thread per JVM, created without inheriting the creating
+    * caller's thread-locals (each task gets its own caller's, captured
+    * at submit). */
+  private[graft] lazy val serveThread =
+    java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(null, r, "graft-serve", 0L, false); t.setDaemon(true); t
+    }
+
+  /** `main` on [[serveThread]] while `delta` runs on the calling thread
+    * — a served call's two independent chains, joined before the
+    * driver merge. The fork goes through Spark's own
+    * `SQLExecution.withThreadLocalCaptured` (the broadcast-exchange
+    * helper), so `main` runs under the caller's active session and
+    * local properties (job group, scheduler pool). A failure surfaces
+    * as its own throwable (main's first), so the callers' `NonFatal`
+    * boundaries classify it exactly as on one thread, and only after
+    * BOTH sides are done: a degraded call never runs its exact
+    * fallback beside Spark work of the failed attempt. A fatal
+    * throwable on the calling thread (an interrupt) propagates at
+    * once. */
+  private def overlapped[A, B](spark: SparkSession)(main: => A)(delta: => B): (A, B) = {
+    val forked = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], serveThread)(main)
+    val d = scala.util.Try(delta)
+    val m =
+      try scala.util.Success(forked.get())
+      catch { case e: java.util.concurrent.ExecutionException => scala.util.Failure(e.getCause) }
+    (m.get, d.get)
+  }
 }
 
 /** Semantic top-k vector search over a document corpus — the Spark-native
@@ -232,25 +263,18 @@ final class SearchEngine(
       case sources => sources.head
     }).drop("_src")
 
-  /** The hit payloads as a driver-side map — [[mainSources]]' rule
-    * plus the delta hits' text from the live delta rows, in ONE
-    * collect of ≤ (main + delta ids) In-filtered point lookups. The
-    * collecting routes' payload step: a plan-side join of the ≤ k hits
-    * would add a broadcast and a range-partitioned sort for a handful
-    * of rows. `mainIds` and `deltaIds` are disjoint (a delta hit is
-    * never a live canonical id), so each id reads only its own side. */
-  private def textOf(snap: ServingSnapshot, root: Boolean, mainIds: Seq[Long],
-                     delta: Option[DataFrame], deltaIds: Seq[Long]): Map[Long, String] = {
-    val sources =
-      (if (mainIds.isEmpty) Nil else mainSources(snap, root, mainIds)) ++
-        delta.filter(_ => deltaIds.nonEmpty).map(_
-          .filter(col("doc_id").isin(deltaIds: _*))
-          .select($"doc_id", $"text", lit(0).as("_src")))
-    if (sources.isEmpty) Map.empty
-    else sources.reduce(_.unionByName(_)).collect()
+  /** The main hits' payloads as a driver-side map — [[mainSources]]'
+    * rule in ONE collect of ≤ k In-filtered point lookups, the
+    * collecting routes' main-chain tail: a plan-side join of the ≤ k
+    * hits would add a broadcast and a range-partitioned sort for a
+    * handful of rows. (Delta hits carry their own text from the delta
+    * top-k.) */
+  private def textOf(snap: ServingSnapshot, root: Boolean,
+                     mainIds: Seq[Long]): Map[Long, String] =
+    if (mainIds.isEmpty) Map.empty
+    else mainSources(snap, root, mainIds).reduce(_.unionByName(_)).collect()
       .groupBy(_.getLong(0))
       .map { case (id, rows) => id -> rows.minBy(_.getInt(2)).getString(1) }
-  }
 
   /** The searchable rows: live corpus ∪ (when a delta is named) the
     * delta's LIVE (doc_id, text, embedding) rows, under the engine's
@@ -480,18 +504,16 @@ final class SearchEngine(
                     filter: Seq[(String, Any)] = Nil,
                     mainDir: Option[String] = None): DataFrame = {
     val r = rankIndexed(sfDir, prompt, k, nProbe, shortlist, deltaDir,
-      filter, mainDir)
+      filter, mainDir, mainText = false)
     val scores = r.hits.toDF("doc_id", "score")
     val corpusPayload = mainPayload(r.snap, mainDir.isDefined, r.mainIds)
     // delta docs are NOT in the corpus parquet — their payload rides
     // the delta segments themselves (encodeSegment carries the ingest
     // batch's columns through), already id-unique and corpus-disjoint;
-    // the ≤ k texts are read from the snapshot's live rows
+    // the ≤ k texts came back with the delta top-k
     val payload =
-      if (r.deltaIds.isEmpty) corpusPayload
-      else corpusPayload.unionByName(
-        textOf(r.snap, root = false, Nil, r.delta, r.deltaIds).toSeq
-          .toDF("doc_id", "text"))
+      if (r.text.isEmpty) corpusPayload
+      else corpusPayload.unionByName(r.text.toSeq.toDF("doc_id", "text"))
     // the inner join drops a merged hit whose payload exists NOWHERE
     // (artifact without a text column AND absent from the documents
     // table) — such a result serves under-k rather than fabricating a
@@ -504,33 +526,37 @@ final class SearchEngine(
   }
 
   /** [[searchIndexed]]'s answer collected for the tool surface: the
-    * same ranking, with the payload step as the batch route's
-    * driver-side [[textOf]] merge (one ≤ k-id point-lookup collect)
-    * instead of a plan-side join and sort of ≤ k rows. */
+    * same ranking, with the main payload step as the batch route's
+    * driver-side [[textOf]] merge (one ≤ k-id point-lookup collect on
+    * the main chain) instead of a plan-side join and sort of ≤ k rows. */
   private def searchIndexedHits(sfDir: String, prompt: String, k: Int,
                                 deltaDir: Option[String],
                                 filter: Seq[(String, Any)],
                                 mainDir: Option[String]): Array[SearchHit] = {
     val r = rankIndexed(sfDir, prompt, k,
       graft.queries.AnnQueries.IvfNProbe, graft.queries.AnnQueries.ServedShortlist,
-      deltaDir, filter, mainDir)
-    val text = textOf(r.snap, mainDir.isDefined, r.mainIds, r.delta, r.deltaIds)
-    r.hits.flatMap { case (id, score) => text.get(id).map(SearchHit(id, _, score)) }
+      deltaDir, filter, mainDir, mainText = true)
+    r.hits.flatMap { case (id, score) => r.text.get(id).map(SearchHit(id, _, score)) }
       .toArray
   }
 
   /** One served prompt's ranked (doc_id, score) hits, ≤ k, in (score
-    * desc, doc_id asc) order, with the snapshot and filtered live
-    * delta they were ranked against (the payload step reads the
-    * same). */
-  private final class Ranked(val snap: ServingSnapshot, val delta: Option[DataFrame],
-                             val hits: Seq[(Long, Double)], val mainIds: Seq[Long],
-                             val deltaIds: Seq[Long])
+    * desc, doc_id asc) order, with the snapshot they were ranked
+    * against, the main side's hit ids and the hits' payloads known so
+    * far: every delta hit's, plus every main hit's when the main chain
+    * fetched them (`mainText`). */
+  private final class Ranked(val snap: ServingSnapshot, val hits: Seq[(Long, Double)],
+                             val mainIds: Seq[Long], val text: Map[Long, String])
 
+  /** The ranking runs as two chains at once ([[SearchEngine.overlapped]]):
+    * the MAIN chain probes the artifact and, with `mainText`, then
+    * reads its ≤ k hits' payloads; the DELTA chain runs the delta
+    * top-k (text riding with each hit) and its collision check. Neither
+    * reads the other's output before the ≤ 2k driver merge. */
   private def rankIndexed(sfDir: String, prompt: String, k: Int, nProbe: Int,
                           shortlist: Int, deltaDir: Option[String],
                           filter: Seq[(String, Any)],
-                          mainDir: Option[String]): Ranked = {
+                          mainDir: Option[String], mainText: Boolean): Ranked = {
     // the payload fetch and the driver merge are O(k): an unbounded
     // caller-supplied k would build an arbitrarily large In literal
     // list and driver row set — fail the request loudly instead (the
@@ -550,8 +576,8 @@ final class SearchEngine(
     // collisions inside the delta resolve latest-batch-wins and
     // tombstoned rows are dropped (the lifecycle rules corpusWithDelta
     // documents — both routes share them)
-    val snap = snapshot(sfDir, main, deltaDir, root = mainDir.isDefined)
-    val delta = snap.delta(filter)
+    val root = mainDir.isDefined
+    val snap = snapshot(sfDir, main, deltaDir, root)
     // the EVOLVING-index route is q150's main+delta read: the main
     // artifact is PROBED (cell pruning, ADC shortlist, exact rescore)
     // and the delta is EXACT-SCANNED in full — q150's documented rule
@@ -568,37 +594,40 @@ final class SearchEngine(
     // tombstoned ids are excluded INSIDE the probe's scans (size-gated
     // anti-join before any ranking), so the main top-k back-fills with
     // live rows exactly — a deleted document is unserved, not a hole
-    val mainHits = graft.search.AnnIndex
-      .probeIvfPq(spark, main, qv, k, nProbe, shortlist,
-        predicate = filterPredicate(filter),
-        exclude = snap.tombstoneIds.map(snap.tombstoneHint),
-        artifact = Some(snap.artifact))
-      .collect() // ≤ k rows — the bounded driver merge every top-k ends in
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // delta side: exact top-k over delta \ corpus-ids — the corpus is
-    // CANONICAL on an id collision, exactly like the exact route's
-    // anti-join (corpusWithDelta), so the fallback really is "slower,
-    // never wronger" ([[deltaTopK]])
-    val deltaHits: Seq[(Long, Double)] = delta match {
-      case None => Nil
-      case Some(d) =>
-        deltaTopK(d, canonicalIds(sfDir, snap, mainDir.isDefined, filter),
+    val ((mainHits, text), deltaHits) = SearchEngine.overlapped(spark) {
+      val hits = graft.search.AnnIndex
+        .probeIvfPq(spark, main, qv, k, nProbe, shortlist,
+          predicate = filterPredicate(filter),
+          exclude = snap.tombstoneIds.map(snap.tombstoneHint),
+          artifact = Some(snap.artifact))
+        .collect() // ≤ k rows — the bounded driver merge every top-k ends in
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      (hits, if (mainText) textOf(snap, root, hits.map(_._1)) else Map.empty[Long, String])
+    } {
+      // delta side: exact top-k over delta \ corpus-ids — the corpus is
+      // CANONICAL on an id collision, exactly like the exact route's
+      // anti-join (corpusWithDelta), so the fallback really is "slower,
+      // never wronger" ([[deltaTopK]])
+      snap.delta(filter).fold(Seq.empty[(Long, Double, String)]) { d =>
+        deltaTopK(d, canonicalIds(sfDir, snap, root, filter),
             snap.tombstoneIds, s"delta top-$k") { base =>
           base
             .withColumn("score", round(neo4jScore(col("embedding"), typedLit(qv.toSeq)), 6))
             .orderBy(desc("score"), asc("doc_id"))
             .limit(k)
-            .select($"doc_id", $"score")
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+            .select($"doc_id", $"score", $"text")
+            .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq
         }(_._1)
+      }
     }
     // mainHits' ids live in the corpus, deltaHits' ids provably do not
     // — the sets are disjoint and each is id-unique, so the merge is a
     // plain sorted take
-    val hits = (mainHits ++ deltaHits)
+    val hits = (mainHits ++ deltaHits.map(h => (h._1, h._2)))
       .sortBy { case (id, score) => (-score, id) }
       .take(k)
-    new Ranked(snap, delta, hits, mainHits.map(_._1), deltaHits.map(_._1))
+    new Ranked(snap, hits, mainHits.map(_._1),
+      text ++ deltaHits.map(h => h._1 -> h._3))
   }
 
   /** The delta side's top-k under corpus-canonical collision
@@ -911,23 +940,28 @@ final class SearchEngine(
       mainDir: Option[String] = None): Seq[Seq[SearchHit]] = {
     requireBatch(prompts, k)
     val main = mainDir.getOrElse(indexDir(sfDir))
-    val snap = snapshot(sfDir, main, deltaDir, root = mainDir.isDefined)
+    val root = mainDir.isDefined
+    val snap = snapshot(sfDir, main, deltaDir, root)
     val queries = queryFrame(prompts)
-    val mainHits =
-      batchProbe(snap, main, queries, k, nProbe, shortlist, filter)
-      .collect() // ≤ prompts·k rows
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // DELTA: one exact pass scores every live delta row against every
-    // query (queries broadcast — ≤ MaxBatchPrompts rows); collision
-    // canonicity is the per-prompt loop's rule, batched: candidate ids
-    // that are LIVE canonical ids are excluded and the scan retries
-    val delta = snap.delta(filter)
-    val deltaHits: Seq[(Long, Long, Double)] = delta match {
-      case None => Nil
-      case Some(d) =>
+    // the per-prompt route's two chains, batched: the MAIN chain runs
+    // the one-plan probe and then its hits' payload lookup while the
+    // DELTA chain runs the batched delta top-k, its collision check
+    // and its hits' text lookup
+    val ((mainHits, mainText), (deltaHits, deltaText)) = SearchEngine.overlapped(spark) {
+      val hits = batchProbe(snap, main, queries, k, nProbe, shortlist, filter)
+        .collect() // ≤ prompts·k rows
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      (hits, textOf(snap, root, hits.map(_._2).distinct.toIndexedSeq))
+    } {
+      // one exact pass scores every live delta row against every query
+      // (queries broadcast — ≤ MaxBatchPrompts rows); collision
+      // canonicity is the per-prompt loop's rule, batched: candidate
+      // ids that are LIVE canonical ids are excluded and the scan
+      // retries
+      snap.delta(filter).fold((Seq.empty[(Long, Long, Double)], Map.empty[Long, String])) { d =>
         val qside = broadcast(queries
           .select($"vec_id".as("query_id"), $"embedding".as("qe")))
-        deltaTopK(d, canonicalIds(sfDir, snap, mainDir.isDefined, filter),
+        val hits = deltaTopK(d, canonicalIds(sfDir, snap, root, filter),
             snap.tombstoneIds, s"batched delta top-$k") { base =>
           base.crossJoin(qside)
             .withColumn("score",
@@ -940,10 +974,16 @@ final class SearchEngine(
             .collect() // ≤ prompts·k rows
             .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
         }(_._2)
+        // the top-k aggregate keeps (id, score) only: the ≤ prompts·k
+        // hits' text is one In-filtered lookup of the live delta rows
+        val ids = hits.map(_._2).distinct
+        (hits, if (ids.isEmpty) Map.empty[Long, String]
+          else d.filter(col("doc_id").isin(ids: _*)).select($"doc_id", $"text")
+            .collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
+      }
     }
     // merge per query (the per-prompt route's ≤ 2k driver merge,
-    // batched) and fetch payloads once for the union of hit ids —
-    // grouped maps + id sets keep the whole driver tail O(prompts·k),
+    // batched) — grouped maps keep the whole driver tail O(prompts·k),
     // the bound the caps exist to guarantee
     val mainByQ = mainHits.groupBy(_._1)
     val deltaByQ = deltaHits.groupBy(_._1)
@@ -956,11 +996,7 @@ final class SearchEngine(
         .sortBy { case (id, score) => (-score, id) }
         .take(k)
     }
-    val mainIdSet = mainHits.map(_._2).toSet
-    val deltaIdSet = deltaHits.map(_._2).toSet
-    val mergedIds = merged.flatten.map(_._1).distinct
-    val text = textOf(snap, mainDir.isDefined, mergedIds.filter(mainIdSet),
-      delta, mergedIds.filter(deltaIdSet))
+    val text = mainText ++ deltaText
     // a merged hit with no payload anywhere is dropped below k — the
     // per-prompt route's rule exactly (see searchIndexed's final
     // join), keeping batch == per-prompt on this edge

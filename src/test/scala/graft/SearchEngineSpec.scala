@@ -1151,4 +1151,100 @@ class SearchEngineSpec extends SparkSpec {
     assert(eng.indexFallbackCount.get === before + 1,
       "the collision storm must fail the index route, counted")
   }
+
+  test("a main-chain failure beside a live delta chain degrades once to the exact answer") {
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    // a private copy of the fixture, so its session artifact is this
+    // test's own and deleting its files disturbs no other test
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_fork_fail_spec").toString
+    val sf = s"$tmp/sf"
+    for (t <- Seq("documents", "embeddings"))
+      FileUtil.copy(fs, new Path(s"$sf0001/$t.parquet"), fs, new Path(s"$sf/$t.parquet"),
+        false, spark.sparkContext.hadoopConfiguration)
+    val eng = new SearchEngine(spark)
+    val main = eng.indexDir(sf)
+    val deltaDir = s"$tmp/delta"
+    val prompt = "forked chain failure spec fresh document"
+    AnnIndex.appendDeltaBatch(spark, main, deltaDir,
+      Seq((980000001L, new HashingEmbedder(64).embed(prompt).toSeq, prompt))
+        .toDF("vec_id", "embedding", "text"), 0L, compactEvery = 2)
+    // a first call resolves the snapshot: its artifact relation now
+    // lists cell files that the next probe will not find
+    eng.searchJsonIndexed(sf, prompt, 10, Some(deltaDir))
+    val cells = fs.listFiles(new Path(s"$main/corpus"), true)
+    while (cells.hasNext) {
+      val f = cells.next().getPath
+      if (f.getName.endsWith(".parquet")) fs.delete(f, false)
+    }
+    // the exact route reads the documents, embeddings and delta only
+    val exact = eng.searchJson(sf, prompt, 10, Some(deltaDir))
+    assert(exact.contains("\"doc_id\":980000001,"), exact)
+    val before = eng.indexFallbackCount.get
+    assert(eng.searchJsonIndexed(sf, prompt, 10, Some(deltaDir)) === exact,
+      "the degraded call must serve the exact answer, delta hit included")
+    assert(eng.indexFallbackCount.get === before + 1,
+      "one degraded call counts one fallback")
+  }
+
+  test("a served call's forked main chain runs under the caller's job group; no execution id leaks into the serve thread") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SQLExecution
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_fork_props_spec").toString + "/r"
+    ServingRoot.init(spark, AnnQueries.ivfPqIndexDir(spark, sf0001), root)
+    val (idx, delta) = ServingRoot.resolve(spark, root)
+    val prompt = "forked chain job group spec"
+    AnnIndex.appendDeltaBatch(spark, idx, delta,
+      Seq((980000101L, new HashingEmbedder(64).embed(prompt).toSeq, prompt))
+        .toDF("vec_id", "embedding", "text"), 0L, compactEvery = 2)
+    val eng = new SearchEngine(spark)
+    val prompts = Seq(prompt, AnnQueries.ServedPrompt)
+    eng.searchJsonBatchRoot(sf0001, root, prompts, 10) // resolves the snapshot
+    val sc = spark.sparkContext
+    val group = "graft-fork-props-spec"
+    // every job started while `serve` runs, as its local properties
+    def jobsOf(serve: => Unit): Seq[java.util.Properties] = {
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.properties)
+      }
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      sc.addSparkListener(l)
+      try {
+        sc.setJobGroup(group, "served call under a job group")
+        try serve finally sc.clearJobGroup()
+        org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(l)
+      jobs.asScala.toSeq
+    }
+    for ((face, serve) <- Seq[(String, () => Unit)](
+        "single" -> (() => eng.searchJsonRoot(sf0001, root, prompt, 10)),
+        "batch" -> (() => eng.searchJsonBatchRoot(sf0001, root, prompts, 10)));
+         round <- 1 to 2) {
+      val before = eng.indexFallbackCount.get
+      val jobs = jobsOf(serve())
+      assert(eng.indexFallbackCount.get === before, s"$face: the index route must serve")
+      val execs = jobs.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).toSet
+      // probe + main payload on the forked chain, delta top-k +
+      // collision check on the calling one
+      assert(execs.size >= 4, s"$face $round: both chains' executions expected, got $execs")
+      jobs.foreach { p =>
+        assert(p.getProperty("spark.jobGroup.id") === group,
+          s"$face $round: a job ran outside the caller's job group: $p")
+        assert(p.getProperty(SQLExecution.EXECUTION_ROOT_ID_KEY) ===
+          p.getProperty(SQLExecution.EXECUTION_ID_KEY),
+          s"$face $round: an execution nested under a leaked execution id: $p")
+      }
+      val poolExec = SearchEngine.serveThread.submit(new java.util.concurrent.Callable[String] {
+        def call(): String = sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY)
+      }).get()
+      assert(poolExec === null, s"$face $round: the serve thread kept execution id $poolExec")
+    }
+  }
 }
