@@ -391,7 +391,7 @@ object PlanDump {
         + "tombstones broadcast ANTI-join the main scan and shadow the "
         + "delta's LWW-resolved rows BEFORE any ranking, so the top-k "
         + "back-fills with live rows exactly (no oversample-then-drop); "
-        + "both segment scans stay cell-pruned with codes-only ADC."),
+        + "both segment scans stay cell-pruned, each scanned once."),
     "q173_served_delete" ->
       ("The service path over the delete lifecycle: q165's plan (eager "
         + "probe + PushedFilter-In payload point lookups + broadcast "
@@ -408,7 +408,7 @@ object PlanDump {
     "q175_major_fold" ->
       ("Post-fold probe: q148's exact plan shape against the artifact "
         + "majorCompact rewrote from the LSM's live frames — same cell "
-        + "PartitionFilters, same codes-only ADC ReadSchema; the fold "
+        + "PartitionFilter on the one scan, same two stacked heaps; the fold "
         + "changed the files, not the plan."),
     "q176_evolving_eval" ->
       ("Evolving-index standing eval: LSM liveness resolves ONCE for "
@@ -507,10 +507,10 @@ object PlanDump {
         + "sort-merges."),
     "q186_batch_served" ->
       ("Batched serving's probe frame (the plan IS the feature): N "
-        + "prompts share ONE probe subtree — a single pair of DPP-"
-        + "pruned artifact scans (codes-only ADC + exact rescore) "
-        + "serves the whole batch, per-query shortlists window-group-"
-        + "limit map-side, top-k combines in partial top-k heaps; a "
+        + "prompts share ONE probe subtree — a single DPP-pruned "
+        + "artifact scan (ADC distance and exact score per pair) "
+        + "serves the whole batch, per-query shortlists rank in one "
+        + "window, top-k combines in partial top-k heaps; a "
         + "per-prompt fallback would multiply the artifact scans by "
         + "the batch size. (q186's returned frame is the O(prompts·k) "
         + "driver merge by design; this dumps the inner probe frame — "
@@ -521,7 +521,7 @@ object PlanDump {
         + "THROUGH the serving pointer): the root resolves ONCE for "
         + "the whole batch — every artifact scan in the plan reads the "
         + "SAME pointer-resolved epoch generation — and the N prompts "
-        + "still share ONE ADC + exact-rescore artifact scan pair; "
+        + "still share ONE artifact scan; "
         + "post-fold the epoch delta carries no tombstones, so no "
         + "exclusion anti-join survives in the probe. (Like q186, the "
         + "declared query's returned frame is the O(prompts·k) driver "
@@ -574,32 +574,33 @@ object PlanDump {
         "aligned per-frame Hamming sum as the verify — band equi-join " +
         "then doc-keyed equi-joins only, never pair enumeration."),
     "q154_ivfpq_residual" ->
-      ("Residual IVFADC: q148's exact plan shape — cell-pruned " +
-        "codes-only ADC scan, bounded shortlist, broadcast exact " +
-        "rescore — with per-(cell, code) broadcast-literal lookup " +
-        "tables; the encoding changed, the plan did not."),
+      ("Residual IVFADC: q148's exact plan shape — one cell-pruned " +
+        "scan, bounded ADC shortlist heap, exact top-k heap — with " +
+        "per-(cell, code) literal lookup tables; the encoding changed, " +
+        "the plan did not."),
     "q152_filtered_ivfpq" ->
       ("Filtered ANN (pre-filter strategy): the label predicate reaches " +
-        "both artifact scans as a PushedFilter UNDER the cell " +
+        "the artifact scan as a PushedFilter UNDER the cell " +
         "PartitionFilter — row groups are skipped by column statistics, " +
         "the ADC shortlist ranks qualifying rows only, and selectivity " +
         "cannot starve the top-k."),
     "q153_ivfpq_compact" ->
       ("Minor compaction read path: the graduated delta segment scans " +
-        "like the main artifact (cell-pruned, codes-only ADC), the two " +
+        "like the main artifact (cell-pruned, one scan each), the two " +
         "segments UNION under one quantizer's cell ranking, one " +
-        "shortlist bounds the exact rescore — q150's full delta scan " +
-        "retired for nProbe/cells of it."),
+        "shortlist heap bounds the exact top-k — q150's full delta " +
+        "scan retired for nProbe/cells of it."),
     "q151_ivfpq_multiprobe" ->
       ("Batched IVF-PQ probe: per-query cell ranking against broadcast " +
-        "centers, the codes-only corpus read DPP-pruned by the " +
-        "broadcast (query x nProbe) side, inline-LUT ADC distances, " +
-        "window-group-limited per-query shortlists, and an exact " +
-        "rescore that DPP-joins back and tops out in map-side heaps."),
+        "centers, ONE corpus read DPP-pruned by the broadcast " +
+        "(query x nProbe) side, inline-LUT ADC distance and exact " +
+        "score per (query, row) pair, per-query shortlists over a " +
+        "shuffle of (query_id, vec_id, adc_d, score), topping out in " +
+        "map-side heaps."),
     "q150_ivfpq_delta" ->
       ("Incremental main+delta search (the LSM read path): the q148 " +
-        "probe shape against the MAIN-built artifact (cell-pruned " +
-        "scans, codes-only ADC, broadcast shortlist rescore) UNIONed " +
+        "probe shape against the MAIN-built artifact (one cell-pruned " +
+        "scan, ADC shortlist heap, exact top-k heap) UNIONed " +
         "with one exact scan of the small delta, merged by a final " +
         "TakeOrderedAndProject — no join between the sides."),
     "q149_mmr_multi" ->
@@ -615,12 +616,11 @@ object PlanDump {
         "minima per (partition, column) before the one exchange; no " +
         "distinct directory, no window, no join anywhere."),
     "q148_ivfpq_search" ->
-      ("Composed IVF-PQ probe: both artifact scans carry the cell " +
-        "PartitionFilter; the ADC scan's ReadSchema is (vec_id, " +
-        "c0..c3) — codes only, never the raw vectors — topping out in " +
-        "a shortlist TakeOrderedAndProject; the exact rescore " +
-        "broadcast-joins the bounded shortlist back onto the pruned " +
-        "cells."),
+      ("Composed IVF-PQ probe: ONE artifact scan carries the cell " +
+        "PartitionFilter and gives each row its ADC distance (codes " +
+        "against the query's lookup tables) and its exact score; a " +
+        "shortlist TakeOrderedAndProject by ADC feeds an exact-score " +
+        "TakeOrderedAndProject — one job, no join back onto the cells."),
     "q145_pq_adc" ->
       ("ADC search: per-subspace lookup tables built from the query " +
         "against the fitted codebooks (≤4 entries each); ALL m code " +

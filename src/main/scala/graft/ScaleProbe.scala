@@ -144,6 +144,10 @@ object ScaleProbe {
         foldSoakProbe(spark, srcDir, flags)
       else if (flags.contains("para-probe") && flags.contains("distinct"))
         paraProbeDistinct(spark, copies)
+      else if (flags.contains("served-tombstone-probe")) {
+        ensureClones(spark, srcDir, outDir, copies)
+        servedTombstoneProbe(spark, outDir, flags)
+      }
       else if (flags.contains("tombstone-probe")) {
         ensureClones(spark, srcDir, outDir, copies)
         tombstoneProbe(spark, outDir, flags)
@@ -1303,6 +1307,81 @@ object ScaleProbe {
       s"""{"tombstones":$n,"store_bytes":$bytes,"broadcast_hinted":$hinted,"exclusion_join":"$joinOp","warm_sec":${f"$warm%.3f"},"answer_equals_baseline":$equal}"""
     }
     println(s"""{"probe":"tombstone-volume","n_corpus":${spark.read.parquet(s"$outDir/embeddings.parquet").count()},"fold_trigger_rows":${AnnQueries.TombstoneFoldRows},"broadcast_max_bytes":${AnnIndex.TombstoneBroadcastMaxBytes},"tiers":[${tiers.mkString(",")}]}""")
+    true
+  }
+
+  /** Served tombstone-volume probe (--served-tombstone-probe
+    * [--tombstones n1,n2,…]): [[tombstoneProbe]]'s question asked of
+    * the SERVED routes, whose serving snapshot chooses its own
+    * exclusion. A serving root over the clone's IVF-PQ artifact
+    * accumulates scattered id-only tombstones tier by tier (each tier
+    * appends one segment of new ids, disjoint from the corpus, so
+    * every answer must equal the tombstone-free baseline). Receipts per
+    * tier: store bytes, the first single `searchJsonRoot` call after
+    * the append (it resolves the new snapshot), the median of three
+    * warm singles, a first and a warm `searchJsonBatchRoot` call, the
+    * process's live heap after full collections (local mode: the
+    * driver and the block manager's cached frames), whether any call
+    * degraded to the exact fallback, and answer equality. */
+  private def servedTombstoneProbe(spark: SparkSession, srcDir: String,
+                                   flags: Map[String, String]): Boolean = {
+    import graft.search.AnnIndex
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    val counts = flags.get("tombstones")
+      .map(_.split(",").map(_.trim.toLong).toSeq)
+      .getOrElse(Seq(1000L, 10000L, 100000L, 1000000L))
+    val mainDir = AnnQueries.ivfPqIndexDir(spark, srcDir)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_served_ts_probe").toString + "/r"
+    ServingRoot.init(spark, mainDir, root,
+      embedderSig = Some(new graft.search.HashingEmbedder().signature))
+    val (_, delta) = ServingRoot.resolve(spark, root)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val eng = new graft.search.SearchEngine(spark)
+    def timed(f: => String): (String, Double) = {
+      val t = System.nanoTime()
+      val r = f
+      (r, (System.nanoTime() - t) / 1e6)
+    }
+    def single() = timed(eng.searchJsonRoot(srcDir, root, AnnQueries.ServedPrompt, 10))
+    def batch() = timed(
+      eng.searchJsonBatchRoot(srcDir, root, AnnQueries.BatchServedPrompts, 10))
+    def liveHeapMb(): Double = {
+      val rt = Runtime.getRuntime
+      (1 to 3).foreach(_ => System.gc())
+      (rt.totalMemory - rt.freeMemory) / 1048576.0
+    }
+    val baseline = single()._1
+    val baseWarm = (1 to 3).map(_ => single()._2).sorted.apply(1)
+    val baseBatch = batch()._1
+    val baseBatchWarm = batch()._2
+    val heap0 = liveHeapMb()
+    var have = 0L
+    val tiers = counts.zipWithIndex.map { case (n, b) =>
+      AnnIndex.appendTombstones(spark, delta,
+        spark.range(have, n).select(
+          (pmod(col("id") * 2654435761L, lit(3000000000L)) + 4000000000L)
+            .as("vec_id")),
+        batchId = b.toLong, compactEvery = 0)
+      have = n
+      val bytes = graft.sources.SegmentStore
+        .segments(fs, s"$delta/tombstones")
+        .map(p => fs.getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength)
+        .sum
+      val fallbacks = eng.indexFallbackCount.get
+      val (first, firstMs) = single()
+      val warm = (1 to 3).map(_ => single())
+      val (b1, batchFirstMs) = batch()
+      val (b2, batchWarmMs) = batch()
+      val heap = liveHeapMb()
+      val equal = (first +: warm.map(_._1)).forall(_ == baseline) &&
+        b1 == baseBatch && b2 == baseBatch
+      val degraded = eng.indexFallbackCount.get - fallbacks
+      s"""{"tombstones":$n,"store_bytes":$bytes,"first_ms":${f"$firstMs%.0f"},"warm_ms":${f"${warm.map(_._2).sorted.apply(1)}%.0f"},"batch_first_ms":${f"$batchFirstMs%.0f"},"batch_warm_ms":${f"$batchWarmMs%.0f"},"heap_live_mb":${f"$heap%.1f"},"degraded_calls":$degraded,"answers_equal_baseline":$equal}"""
+    }
+    println(s"""{"probe":"served-tombstone-volume","broadcast_max_bytes":${AnnIndex.TombstoneBroadcastMaxBytes},"baseline":{"warm_ms":${f"$baseWarm%.0f"},"batch_warm_ms":${f"$baseBatchWarm%.0f"},"heap_live_mb":${f"$heap0%.1f"}},"tiers":[${tiers.mkString(",")}]}""")
     true
   }
 

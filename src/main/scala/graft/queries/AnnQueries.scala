@@ -150,9 +150,9 @@ object AnnQueries {
     * still FAILS CLOSED on any miss. On a clustered production corpus
     * the ADC margin is inter-cluster distance, not noise ordering, and
     * the shortlist/corpus ratio collapses; the property q148 certifies
-    * is the PLAN — cell-partition pruning on both scans, an ADC scan
-    * whose ReadSchema is codes-only, a shortlist-bounded exact rescore
-    * — which is scale-independent (PlanSpec-pinned). */
+    * is the PLAN — one cell-pruned scan ranked by ADC into a bounded
+    * shortlist heap, the exact top-k a heap over that shortlist —
+    * which is scale-independent (PlanSpec-pinned). */
   val IvfPqM = 4
   val IvfPqSubDim = 16
   val IvfPqK = 16
@@ -1786,8 +1786,8 @@ object AnnQueries {
       // prompt-in/hits-out call the MCP `vector_search` tool routes
       // (Search.serve → searchJsonIndexed → THIS), minus only the JSON
       // rendering — embed ServedPrompt, probe the shared session
-      // IVF-PQ artifact (cell PartitionFilters on both scans,
-      // codes-only ADC ReadSchema, broadcast shortlist rescore), fetch
+      // IVF-PQ artifact (one cell-pruned scan, ADC shortlist heap,
+      // exact top-k heap — one job), fetch
       // the k hit payloads by id (PushedFilter In on the documents
       // scan — point lookups, never a table scan). Oracle is the
       // EXACT top-10 with payloads recomputed from the prompt
@@ -1879,7 +1879,7 @@ object AnnQueries {
       // vector_search_batch tool minus the JSON rendering): one
       // searchIndexedBatch call answers three standing prompts with
       // ONE probe plan — cell ranking, ADC shortlist and exact
-      // rescore shared across the batch — and the oracle recomputes
+      // top-k shared across the batch — and the oracle recomputes
       // each prompt's exact top-10 with payloads from the literal
       // prompt vectors, so hash-green certifies per-prompt recall,
       // scoring, ordering, and the batched payload fetch.
@@ -1969,13 +1969,13 @@ object AnnQueries {
       // q144's scaladoc promises, round-11 verdict item #3): the
       // persisted artifact is the q75 cell-partitioned corpus whose
       // rows also carry their PQ codes. The probe (a) prunes to the
-      // IvfNProbe nearest cells — `cell IN (...)` reaches both scans
-      // as a PartitionFilter; (b) ADC-scores ONLY the resident CODES
-      // (the ADC scan's ReadSchema is (vec_id, c0..c3) — the raw
-      // vectors never enter it; scoring is m lookups in ≤16-entry
-      // broadcast-literal tables) and shortlists the IvfPqShortlist
-      // best in per-partition heaps; (c) exact-rescores the shortlist
-      // alone via a broadcast semi-join back onto the pruned cells.
+      // IvfNProbe nearest cells — `cell IN (...)` reaches the one
+      // scan as a PartitionFilter; (b) gives each row its ADC distance
+      // from its CODES (m lookups in ≤16-entry literal tables) and
+      // its exact score in the same pass, and shortlists the
+      // IvfPqShortlist best by ADC in per-partition heaps; (c) returns
+      // the shortlist's exact top-10 from a second heap — one job, no
+      // join back onto the cells.
       // The declared oracle IS the exact top-10 (q75's text), so
       // hash-green certifies end-to-end recall of the
       // compressed+pruned route — fails closed on a cell miss OR an
@@ -1994,8 +1994,8 @@ object AnnQueries {
       // (every vector store between index rebuilds: an immutable
       // indexed segment plus a small recent unindexed one): ~90% of
       // the corpus is served by the q148 composed IVF-PQ artifact
-      // BUILT ON MAIN ONLY (cell pruning → codes-only ADC shortlist →
-      // exact rescore), the ~10% delta is exact-scanned in full (it
+      // BUILT ON MAIN ONLY (cell pruning → ADC shortlist → exact
+      // top-k, one scan), the ~10% delta is exact-scanned in full (it
       // is small and fresh by construction — indexing it would cost
       // more than scanning it), and the answer is the merge of the
       // two sides' top-10's — top-k of a union distributes over the
@@ -2032,9 +2032,9 @@ object AnnQueries {
       // corpus read joins broadcast (query × nProbe) cells under
       // dynamic partition pruning, ADC distances are m row-local
       // sqdists against the broadcast-literal codebooks (the per-query
-      // LUT evaluated inline — zero per-query driver work), per-query
-      // shortlists come from a window-group-limited rank, and the
-      // exact rescore DPP-joins the shortlist back and tops out in
+      // LUT evaluated inline — zero per-query driver work) computed
+      // beside each pair's exact score, per-query shortlists come from
+      // one rank window, and the shortlisted scores top out in
       // map-side heaps. Oracle is the exact per-query top-10 (q87's
       // construction) — fails closed on any query's cell or shortlist
       // miss (IvfPqMultiShortlist carries the measured minima).
@@ -2079,8 +2079,8 @@ object AnnQueries {
       // files untouched, O(delta) write) and the probe runs the q148
       // shape over BOTH cell-partitioned segments: one cell ranking
       // serves both (one quantizer), each segment scan partition-prunes
-      // to the probed cells, the codes-only ADC pass ranks the UNION,
-      // one shortlist bounds the exact rescore. q150 exact-scans its
+      // to the probed cells, one ADC shortlist ranks the UNION and
+      // bounds the exact top-k. q150 exact-scans its
       // delta in full; q153 reads nProbe/cells of it like any other
       // segment. from_delta rides along, so hash-green also certifies
       // each hit's segment of origin. Oracle is the exact top-10 over
@@ -2108,8 +2108,8 @@ object AnnQueries {
       // ADC approximates ‖qn − xn‖² = 2 − 2·cos — the true ranking
       // metric — with per-(cell, code) broadcast-literal lookup tables
       // (1024 doubles; still row-local codegen, zero joins). The plan
-      // is exactly q148's (cell-pruned codes-only ADC scan → bounded
-      // shortlist → broadcast exact rescore); what changed is the
+      // is exactly q148's (one cell-pruned scan → bounded ADC
+      // shortlist → exact top-k); what changed is the
       // ENCODING. The tune receipts are honestly flat on this fixture
       // — isotropic vectors give 16 coarse cells nothing to explain,
       // so residual ≈ xn and the published IVFADC gap vanishes by
@@ -2575,7 +2575,7 @@ object AnnQueries {
          |ORDER BY score DESC, e.vec_id ASC LIMIT 10""".stripMargin,
 
     // exact top-10 (q75's oracle text): the composed IVF-PQ route —
-    // cell pruning, code-only ADC shortlist, exact rescore — must
+    // cell pruning, ADC shortlist, exact top-k — must
     // recover it end to end; fails closed on any recall miss
     // exact top-10 BY THE SERVED PROMPT'S VECTOR with document
     // payloads: the index-served service route must recover it end to

@@ -211,17 +211,6 @@ object AnnIndex {
     }
   }
 
-  /** Fit an IVF index: seeded KMeans over normalized vectors; the
-    * corpus gains a `cell` column (at scale: the partition key).
-    * @param cache cache the assigned table for repeated probes; pass
-    *              false for one-shot queries so no unmanaged cached
-    *              blocks outlive the call.
-    * @param maxIter KMeans iterations; a coarse quantizer does not need
-    *                convergence — cells only gate which vectors are
-    *                exact-scored, so fewer iterations trade a little
-    *                recall for a much cheaper (offline) build.
-    * @param initMode "k-means||" (default, better spread) or "random"
-    *                 (one fewer pass over the data). */
   /** KMeans input partitioning — a CONSTANT, not defaultParallelism:
     * k-means|| seeds its per-partition sampling from the partition
     * index, so the fitted quantizer is a function of the input's
@@ -234,6 +223,17 @@ object AnnIndex {
     * --multifile, SCALING.md round 10). */
   val IvfFitPartitions = 32
 
+  /** Fit an IVF index: seeded KMeans over normalized vectors; the
+    * corpus gains a `cell` column (at scale: the partition key).
+    * @param cache cache the assigned table for repeated probes; pass
+    *              false for one-shot queries so no unmanaged cached
+    *              blocks outlive the call.
+    * @param maxIter KMeans iterations; a coarse quantizer does not need
+    *                convergence — cells only gate which vectors are
+    *                exact-scored, so fewer iterations trade a little
+    *                recall for a much cheaper (offline) build.
+    * @param initMode "k-means||" (default, better spread) or "random"
+    *                 (one fewer pass over the data). */
   def buildIvf(corpus: DataFrame, cells: Int = 16, seed: Long = 7L,
                cache: Boolean = true, maxIter: Int = 10,
                initMode: String = "k-means||"): IvfIndex = {
@@ -287,10 +287,9 @@ object AnnIndex {
     * e.g. [[graft.operators.SemDedup.fit]] per 16-dim slice). The
     * codebooks themselves persist as a tiny (sub, cell, ce) parquet so
     * a probe can rebuild its lookup tables without refitting. At scale
-    * the probe's ADC pass then reads ONLY (vec_id, c0..c{m-1}) from
-    * the probed cell directories — column pruning drops the raw
-    * vectors from the scan entirely; the raw vectors are read just for
-    * the shortlist rescore. */
+    * the probe reads only the probed cell directories, ranking each
+    * row by its codes and scoring it exactly in the same pass
+    * ([[probeIvfPq]]). */
   def saveIvfPq(idx: IvfIndex, codebooks: Seq[Seq[Seq[Double]]], subDim: Int,
                 dir: String): Unit = {
     idx.model.write.overwrite().save(s"$dir/model")
@@ -310,20 +309,6 @@ object AnnIndex {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
   }
 
-  /** Probe a persisted IVF-PQ artifact — the composed read path the
-    * layout exists for: (1) rank the reloaded quantizer's centers,
-    * keep the `nProbe` nearest cells; (2) ADC-score ONLY the resident
-    * CODES of those cells (partition pruning on `cell`, column pruning
-    * to (vec_id, c0..c{m-1}) — the raw vectors never enter this scan)
-    * against the query's per-subspace lookup tables, shortlisting the
-    * `shortlist` best by (adc distance, vec_id) in per-partition heaps;
-    * (3) exact-rescore the shortlist alone — a broadcast semi-join of
-    * the shortlist ids against the same pruned cell directories, this
-    * time reading embeddings — and return the top `k` under the
-    * engine's (1+cos)/2 convention. Recall is exact iff every true
-    * top-k member survives both the cell pruning AND the ADC
-    * shortlist; the declared oracle (exact top-k) fails closed on
-    * either miss, and `--ivfpq-tune` re-measures both minima. */
   /** Session memo of loaded coarse quantizers keyed by artifact dir.
     * Artifacts are write-once per session (the session builders) or
     * land in fresh directories (majorCompact, specs), so a loaded
@@ -389,30 +374,61 @@ object AnnIndex {
     }.reduce(_ + _)
   }
 
-  /** `predicate` is the FILTERED-ANN hook (every production vector
+  /** The engine's exact score of a row's `embedding` against `query`:
+    * (1+cos)/2, rounded to 6 places — every probe's final ranking key. */
+  private def exactScore(query: Array[Float]): Column =
+    round(neo4jScore(col("embedding"), typedLit(query.toSeq)), 6)
+
+  /** The one-pass tail every single-query IVF-PQ probe shares. `scored`
+    * is one scan of the probed cells whose rows carry `adc_d` (the
+    * code-only estimate) and `score` (the exact score) side by side;
+    * the shortlist keeps the `shortlist` best by (adc_d, vec_id) — a
+    * TakeOrderedAndProject: a heap per partition, merged once on a
+    * single partition — and the answer is its top `k` by (score desc,
+    * vec_id). One Spark job, no join back onto the cells. */
+  private def shortlistTopK(scored: DataFrame, k: Int, shortlist: Int,
+                            out: Seq[Column]): DataFrame =
+    scored
+      .orderBy(col("adc_d").asc, col("vec_id").asc)
+      .limit(shortlist)
+      .orderBy(col("score").desc, col("vec_id").asc)
+      .limit(k)
+      .select(out :+ col("score"): _*)
+
+  /** Probe a persisted IVF-PQ artifact — the composed read path the
+    * layout exists for: (1) rank the reloaded quantizer's centers,
+    * keep the `nProbe` nearest cells; (2) scan those cells once
+    * (partition pruning on `cell`), giving each row its ADC distance
+    * from the query's per-subspace lookup tables over its codes AND
+    * its exact score under the engine's (1+cos)/2 convention; (3) keep
+    * the `shortlist` best by (adc distance, vec_id) and return their
+    * top `k` by exact score ([[shortlistTopK]]). Recall is exact iff
+    * every true top-k member survives both the cell pruning AND the
+    * ADC shortlist; the declared oracle (exact top-k) fails closed on
+    * either miss, and `--ivfpq-tune` re-measures both minima.
+    *
+    * `predicate` is the FILTERED-ANN hook (every production vector
     * store's metadata filter — Qdrant payloads, Milvus scalar fields):
     * a predicate over the artifact's persisted payload columns, applied
-    * INSIDE both artifact scans (it reaches the parquet reader as a
+    * INSIDE the artifact scan (it reaches the parquet reader as a
     * PushedFilter under the cell PartitionFilter, so row groups of
     * non-qualifying rows are skipped by their column statistics) — the
     * PRE-filter strategy: the ADC shortlist ranks qualifying rows only,
     * so a selective filter cannot starve the top-k the way
     * oversample-then-post-filter can. The default `lit(true)` folds
     * away at optimization time and leaves the unfiltered plan
-    * bit-identical. `payload` names persisted columns to carry into the
-    * output (read from the rescore scan — already open for the
-    * embeddings). */
-  /** `exclude`, when given, is a frame of `vec_id`s anti-joined into
-    * the shortlist scan BEFORE any ranking — the tombstone hook:
-    * excluded ids can neither shortlist nor rescore, so the top-k
+    * bit-identical. A caller holding a small tombstone id set folds it
+    * in here as `!vec_id.isin(ids)` — a filter in the scan's stage, no
+    * join. `payload` names persisted columns to carry into the output.
+    *
+    * `exclude`, when given, is a frame of `vec_id`s anti-joined into
+    * the scan BEFORE any ranking — the tombstone hook for sets too
+    * large to hold: excluded ids can never shortlist, so the top-k
     * back-fills with live rows exactly (no oversample-then-drop
-    * under-fill). The join takes `exclude` as given, hint included:
-    * callers holding a tombstone store apply [[tombstoneHint]]'s
-    * size-gated broadcast, so a store past
-    * [[TombstoneBroadcastMaxBytes]] plans a shuffle anti-join instead
-    * of a driver-sized broadcast. `artifact` is the artifact's
-    * `corpus` relation when the caller already holds one (a serving
-    * snapshot), so the probe skips re-resolving it. */
+    * under-fill). The join takes `exclude` as given, hint included.
+    * `artifact` is the artifact's `corpus` relation when the caller
+    * already holds one (a serving snapshot), so the probe skips
+    * re-resolving it. */
   def probeIvfPq(spark: SparkSession, dir: String, query: Array[Float],
                  k: Int, nProbe: Int, shortlist: Int,
                  predicate: Column = lit(true),
@@ -420,26 +436,13 @@ object AnnIndex {
                  exclude: Option[DataFrame] = None,
                  artifact: Option[DataFrame] = None): DataFrame = {
     val probed = probedCells(spark, dir, query, nProbe)
-    val corpus = artifact.getOrElse(spark.read.parquet(s"$dir/corpus"))
-    def live(df: DataFrame): DataFrame = exclude match {
-      case None => df
-      case Some(ex) => df.join(ex, Seq("vec_id"), "left_anti")
-    }
-    val short = live(corpus
-        .filter(col("cell").isin(probed: _*))
-        .filter(predicate))
-      .select(col("vec_id"), adcDistanceCol(spark, dir, query).as("adc_d"))
-      .orderBy(col("adc_d").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select(col("vec_id"))
-    corpus
+    val pruned = artifact.getOrElse(spark.read.parquet(s"$dir/corpus"))
       .filter(col("cell").isin(probed: _*))
       .filter(predicate)
-      .join(broadcast(short), Seq("vec_id"))
-      .withColumn("score", round(neo4jScore(col("embedding"), typedLit(query.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
-      .select((col("vec_id") +: payload.map(col)) :+ col("score"): _*)
+    val live = exclude.fold(pruned)(pruned.join(_, Seq("vec_id"), "left_anti"))
+    val out = col("vec_id") +: payload.map(col)
+    shortlistTopK(live.select(out :+ adcDistanceCol(spark, dir, query).as("adc_d") :+
+      exactScore(query).as("score"): _*), k, shortlist, out)
   }
 
   /** Persist the RESIDUAL-encoded IVF-PQ layout — IVFADC proper (Jégou
@@ -527,26 +530,15 @@ object AnnIndex {
   }
 
   /** Probe a RESIDUAL-encoded IVF-PQ artifact — [[probeIvfPq]]'s plan
-    * shape (cell-pruned codes-only ADC scan → bounded shortlist →
-    * broadcast exact rescore) with [[adcResidualDistanceCol]] as the
-    * estimator. */
+    * shape (one cell-pruned scan → bounded ADC shortlist → exact top-k)
+    * with [[adcResidualDistanceCol]] as the estimator. */
   def probeIvfPqResidual(spark: SparkSession, dir: String, query: Array[Float],
                          k: Int, nProbe: Int, shortlist: Int): DataFrame = {
     val probed = probedCells(spark, dir, query, nProbe)
-    val corpus = spark.read.parquet(s"$dir/corpus")
-    val short = corpus
+    shortlistTopK(spark.read.parquet(s"$dir/corpus")
       .filter(col("cell").isin(probed: _*))
-      .select(col("vec_id"), adcResidualDistanceCol(spark, dir, query).as("adc_d"))
-      .orderBy(col("adc_d").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select(col("vec_id"))
-    corpus
-      .filter(col("cell").isin(probed: _*))
-      .join(broadcast(short), Seq("vec_id"))
-      .withColumn("score", round(neo4jScore(col("embedding"), typedLit(query.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
-      .select(col("vec_id"), col("score"))
+      .select(col("vec_id"), adcResidualDistanceCol(spark, dir, query).as("adc_d"),
+        exactScore(query).as("score")), k, shortlist, Seq(col("vec_id")))
   }
 
   /** Encode NEW rows into an EXISTING IVF-PQ artifact's geometry — the
@@ -577,30 +569,23 @@ object AnnIndex {
     * codebook set (a main artifact plus [[encodeSegment]]-graduated
     * deltas — the post-minor-compaction read path): every segment scan
     * is pruned to the same probed cells (one quantizer ⇒ one cell
-    * ranking serves all segments), the ADC pass unions the segments'
-    * CODES (codes-only scans), one shortlist ranks the union, and the
-    * exact rescore broadcast-joins it back onto the unioned pruned
-    * segments. `payload` columns (e.g. a per-segment origin marker) ride
-    * the rescore scan into the output. */
+    * ranking serves all segments), each segment's one scan gives its
+    * rows their ADC distance and exact score, and one shortlist ranks
+    * the union ([[shortlistTopK]]). `payload` columns (e.g. a
+    * per-segment origin marker) ride the scans into the output. A
+    * `vec_id` present in two segments is two rows, each ranked on its
+    * own. */
   def probeIvfPqSegments(spark: SparkSession, indexDir: String,
                          segments: Seq[DataFrame], query: Array[Float],
                          k: Int, nProbe: Int, shortlist: Int,
                          payload: Seq[String] = Nil): DataFrame = {
     val probed = probedCells(spark, indexDir, query, nProbe)
-    val pruned = segments.map(_.filter(col("cell").isin(probed: _*)))
     val adc = adcDistanceCol(spark, indexDir, query)
-    val short = pruned.map(_.select(col("vec_id"), adc.as("adc_d")))
-      .reduce(_.unionByName(_))
-      .orderBy(col("adc_d").asc, col("vec_id").asc)
-      .limit(shortlist)
-      .select(col("vec_id"))
-    pruned.map(_.select((col("vec_id") +: payload.map(col)) :+ col("embedding"): _*))
-      .reduce(_.unionByName(_))
-      .join(broadcast(short), Seq("vec_id"))
-      .withColumn("score", round(neo4jScore(col("embedding"), typedLit(query.toSeq)), 6))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(k)
-      .select((col("vec_id") +: payload.map(col)) :+ col("score"): _*)
+    val out = col("vec_id") +: payload.map(col)
+    shortlistTopK(segments
+      .map(_.filter(col("cell").isin(probed: _*))
+        .select(out :+ adc.as("adc_d") :+ exactScore(query).as("score"): _*))
+      .reduce(_.unionByName(_)), k, shortlist, out)
   }
 
   /** Append one encoded micro-batch to an LSM-maintained IVF-PQ delta
@@ -726,17 +711,6 @@ object AnnIndex {
     probeIvfPqSegments(spark, indexDir,
       lsmLiveSegments(spark, indexDir, deltaDir), query, k, nProbe, shortlist)
 
-  /** THE definition of what an LSM-maintained index currently SERVES —
-    * the live segment frames: the main artifact minus tombstoned ids,
-    * plus the delta's manifest-resolved rows after latest-batch-wins
-    * and tombstone shadowing (put wins a same-batch tie). One
-    * resolution shared by [[probeIvfPqLsm]] (per probe), a query batch
-    * that resolves once and probes many times (q176's standing eval),
-    * and [[majorCompact]] — the fold rewrites exactly these frames,
-    * which is WHY post-fold probes equal pre-fold probes by
-    * construction. Delta frames keep their
-    * [[graft.sources.SegmentStore.BatchCol]] stamp (consumers that
-    * persist them drop it). */
   /** Ceiling on the tombstone store's ON-DISK mass up to which the
     * probe-side exclusion joins broadcast the tombstone set; past it
     * the hint is withheld and the planner runs a shuffle anti-join
@@ -776,6 +750,17 @@ object AnnIndex {
     if (bytes <= TombstoneBroadcastMaxBytes) broadcast(_) else identity
   }
 
+  /** THE definition of what an LSM-maintained index currently SERVES —
+    * the live segment frames: the main artifact minus tombstoned ids,
+    * plus the delta's manifest-resolved rows after latest-batch-wins
+    * and tombstone shadowing (put wins a same-batch tie). One
+    * resolution shared by [[probeIvfPqLsm]] (per probe), a query batch
+    * that resolves once and probes many times (q176's standing eval),
+    * and [[majorCompact]] — the fold rewrites exactly these frames,
+    * which is WHY post-fold probes equal pre-fold probes by
+    * construction. Delta frames keep their
+    * [[graft.sources.SegmentStore.BatchCol]] stamp (consumers that
+    * persist them drop it). */
   def lsmLiveSegments(spark: SparkSession, indexDir: String,
                       deltaDir: String): Seq[DataFrame] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1270,23 +1255,23 @@ object AnnIndex {
     * composed with the PQ compression): (1) per-query cell selection
     * runs DISTRIBUTED against the broadcast quantizer centers (the
     * probeIvfMulti machinery — window rank over (sqdist, cell));
-    * (2) the ADC stage joins the corpus CODES on `cell` with the tiny
+    * (2) ONE scan of the corpus joins on `cell` with the tiny
     * (query × nProbe) side broadcast — dynamic partition pruning
-    * bounds I/O to the union of probed cells, and column pruning
-    * keeps the raw vectors out of the scan; each (query, resident)
-    * ADC distance is m row-local sqdists of the query's slices
-    * against the code's centroid, looked up in the broadcast-literal
-    * codebooks (algebraically the per-query LUT, evaluated inline —
-    * no per-query driver work at all); per-query shortlists keep the
-    * best `shortlist` by (adc, vec_id) via a window-group-limited
-    * rank; (3) the exact rescore joins the shortlist back on
-    * (cell, vec_id) — DPP again — and per-query top-k tops out in
-    * map-side heaps ([[graft.expressions.TopKAggExpr]], q87's tail).
+    * bounds I/O to the union of probed cells; each (query, resident)
+    * pair gets its ADC distance (m row-local sqdists of the query's
+    * slices against the code's centroid, looked up in the
+    * broadcast-literal codebooks — algebraically the per-query LUT,
+    * evaluated inline, no per-query driver work at all) and its exact
+    * score side by side; (3) per-query shortlists keep the best
+    * `shortlist` by (adc, vec_id) via one per-query rank window, whose
+    * shuffle carries (query_id, vec_id, adc, score) and never the
+    * query vector, and per-query top-k tops out in map-side heaps
+    * ([[graft.expressions.TopKAggExpr]], q87's tail).
     * Output: (query_id, doc_id, score, rank). */
   def probeIvfPqMulti(spark: SparkSession, dir: String, queries: DataFrame,
                       k: Int, nProbe: Int, shortlist: Int): DataFrame =
     probeIvfPqMultiFrames(spark, dir,
-      () => spark.read.parquet(s"$dir/corpus"), queries, k, nProbe, shortlist)
+      spark.read.parquet(s"$dir/corpus"), queries, k, nProbe, shortlist)
 
   /** [[probeIvfPqMulti]] over EXPLICIT segment frames — the batched
     * face of [[probeIvfPqSegments]], built for the standing evals
@@ -1304,12 +1289,12 @@ object AnnIndex {
     val subs = loadCodebooks(spark, indexDir).keys.toSeq.sorted
     val cols = Seq("cell", "vec_id", "embedding") ++ subs.map(s => s"c$s")
     probeIvfPqMultiFrames(spark, indexDir,
-      () => segments.map(_.select(cols.map(col): _*)).reduce(_.unionByName(_)),
+      segments.map(_.select(cols.map(col): _*)).reduce(_.unionByName(_)),
       queries, k, nProbe, shortlist)
   }
 
   private def probeIvfPqMultiFrames(spark: SparkSession, dir: String,
-                                    corpus: () => DataFrame, queries: DataFrame,
+                                    corpus: DataFrame, queries: DataFrame,
                                     k: Int, nProbe: Int, shortlist: Int): DataFrame = {
     import spark.implicits._
     val model = loadQuantizer(spark, dir)
@@ -1336,20 +1321,14 @@ object AnnIndex {
     }.reduce(_ + _)
     val ws = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("adc_d").asc, col("vec_id").asc)
-    val short = corpus()
+    corpus
       .join(broadcast(qcells), Seq("cell"))
-      .select(col("cell"), col("vec_id"), col("query_id"), col("qe"),
-        adc.as("adc_d"))
+      .select(col("query_id"), col("vec_id"), adc.as("adc_d"),
+        round(neo4jScore(col("embedding"), col("qe")), 6).as("score"))
       .withColumn("srk", row_number().over(ws))
       .filter(col("srk") <= shortlist)
-      .select(col("cell"), col("vec_id"), col("query_id"), col("qe"))
-    corpus()
-      .select(col("cell"), col("vec_id"), col("embedding"))
-      .join(broadcast(short), Seq("cell", "vec_id"))
-      .select(col("query_id"), col("vec_id").as("id"),
-        round(neo4jScore(col("embedding"), col("qe")), 6).as("score"))
       .groupBy(col("query_id"))
-      .agg(graft.expressions.TopKAggExpr.topK(col("id"), col("score"), k).as("hits"))
+      .agg(graft.expressions.TopKAggExpr.topK(col("vec_id"), col("score"), k).as("hits"))
       .select(col("query_id"), posexplode(col("hits")).as(Seq("pos", "hit")))
       .select(col("query_id"), col("hit.id").as("doc_id"), col("hit.score").as("score"),
         (col("pos") + 1).cast("long").as("rank"))

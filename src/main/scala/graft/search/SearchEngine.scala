@@ -32,6 +32,23 @@ object SearchEngine {
     * degrades to the exact scan). */
   val MaxCollisionPasses = 8
 
+  /** The most tombstone rows a serving snapshot holds driver-side as
+    * a scan filter ([[ServingSnapshot.liveProbe]]); past it the probes
+    * anti-join the distinct ids as a frame, broadcast under
+    * [[AnnIndex.TombstoneBroadcastMaxBytes]]. A held id costs every
+    * probe plan one element of its `INSET` (analysed, planned, printed
+    * and shipped in each task's closure), where a frame costs one
+    * broadcast job. MEASURED (`bench/ab_one_pass_probe/
+    * served_tombstone_probe.txt`, ScaleProbe --served-tombstone-probe
+    * on the 200 k-vector clone, scattered ids, warm `searchJsonRoot`):
+    * held and anti-joined singles tie at 1,000–2,000 ids (0.7–1.0 s
+    * each), held ids run 0.2–0.6 s slower at 10^4, 4.7–5.4 s at 10^5
+    * and 70 s at 10^6, where the anti-join stays at 0.6 s and 1.3–1.7
+    * s. The ceiling sits in the tie region: below it the held filter
+    * saves a served store's common case — a few deletes between
+    * folds — one job and an adaptive re-plan per probe. */
+  val HeldTombstoneMaxRows = 2000
+
   /** `filter` as one conjunctive equality predicate (lit(true) when
     * empty — folds away at optimization). */
   private[search] def filterPredicate(filter: Seq[(String, Any)]): Column =
@@ -47,14 +64,18 @@ object SearchEngine {
     *    served artifact's `corpus` and every delta and tombstone
     *    segment, by path (building a relation lists its files and
     *    reads a footer — Spark jobs outside any query);
-    *  - `tombstoneIds`: the distinct tombstoned ids, the probes'
-    *    exclusion side, with `tombstoneHint` — the size-gated join
-    *    hint ([[AnnIndex.tombstoneHint]]) from the listing in hand;
+    *  - `tombstones`: how a probe excludes the tombstoned ids, None
+    *    when there are none: `Left` — the ids collected driver-side
+    *    once per tombstone listing, while the store holds at most
+    *    [[HeldTombstoneMaxRows]] rows ([[liveProbe]] folds them into the
+    *    scan predicate); `Right` — past that, the distinct ids as a
+    *    frame under [[AnnIndex.tombstoneHint]]'s size-gated hint, for
+    *    the probe's anti-join;
     *  - `liveDelta`: the delta's live rows after latest-batch-wins and
     *    tombstone shadowing, every segment column kept so any
     *    request's metadata filter applies on top ([[delta]]).
     *
-    * The two derived frames are lazily `persist`ed: the first request
+    * The derived frames are lazily `persist`ed: the first request
     * that reads one materializes it inside its own query (no extra
     * job), and a lost block recomputes from the lineage — the segment
     * dirs are immutable — where a `localCheckpoint` block would fail
@@ -69,8 +90,7 @@ object SearchEngine {
       val artifact: DataFrame,
       val deltaColumns: Set[String],
       val liveDelta: Option[DataFrame],
-      val tombstoneIds: Option[DataFrame],
-      val tombstoneHint: DataFrame => DataFrame) {
+      val tombstones: Option[Either[Set[Long], DataFrame]]) {
 
     /** The live delta under `filter` — `deltaSegsLww`'s rule: None
       * when no segment carries every filtered column, else the filter
@@ -81,6 +101,25 @@ object SearchEngine {
         .filter(_ => filter.forall { case (c, _) => deltaColumns.contains(c) })
         .map(d => if (filter.isEmpty) d else d.filter(filterPredicate(filter)))
 
+    /** A probe's tombstone exclusion, as (scan predicate, frame to
+      * anti-join): held ids fold into `predicate` as
+      * `!vec_id.isin(ids)` — an In filter (an InSet past 10 ids) in the
+      * scan's stage, with no join, no exchange and no job; a frame goes
+      * to the probe's anti-join. */
+    def liveProbe(predicate: Column): (Column, Option[DataFrame]) = tombstones match {
+      case Some(Left(ids)) => (predicate && !col("vec_id").isin(ids.toSeq: _*), None)
+      case other => (predicate, other.flatMap(_.toOption))
+    }
+
+    /** The tombstoned ids among the bounded candidate list `ids`: a
+      * lookup in the held set, else an In-filtered read of the frame. */
+    def deletedAmong(ids: Seq[Long]): Set[Long] = tombstones match {
+      case None => Set.empty
+      case Some(Left(held)) => ids.filter(held).toSet
+      case Some(Right(t)) =>
+        t.filter(col("vec_id").isin(ids: _*)).collect().map(_.getLong(0)).toSet
+    }
+
     /** Unpersist the derived frames `next` does not carry over. A
       * carried frame must stay cached: Spark's cache matches plans,
       * not objects, so unpersisting it would drop `next`'s entry. */
@@ -88,7 +127,7 @@ object SearchEngine {
       def drop(mine: Option[DataFrame], theirs: Option[DataFrame]): Unit =
         mine.filterNot(d => theirs.exists(_ eq d)).foreach(_.unpersist(blocking = false))
       drop(liveDelta, next.liveDelta)
-      drop(tombstoneIds, next.tombstoneIds)
+      drop(tombstones.flatMap(_.toOption), next.tombstones.flatMap(_.toOption))
     }
   }
 
@@ -413,7 +452,7 @@ final class SearchEngine(
     * root for an epoch artifact (`root` — an epoch swap replaces the
     * root's one entry) and the (corpus, delta) pair otherwise. A new
     * snapshot carries over from its predecessor the relations of
-    * paths still listed, the tombstone ids while the tombstone
+    * paths still listed, the tombstone exclusion while the tombstone
     * listing is unchanged, and the live delta while the delta and
     * tombstone listings both are. */
   private def snapshot(sfDir: String, main: String, deltaDir: Option[String],
@@ -441,21 +480,28 @@ final class SearchEngine(
       val tombRows =
         if (tombs.isEmpty) None
         else Some(tombs.map(relations).reduce(_.unionByName(_)))
-      val hint = sameTombs.map(_.tombstoneHint).getOrElse(
-        if (tombs.isEmpty) identity[DataFrame] _
-        else AnnIndex.tombstoneHint(fs, tombs))
+      // read only when a frame is built: the listing's raw bytes
+      lazy val hint = AnnIndex.tombstoneHint(fs, tombs)
+      val tombstones = sameTombs match {
+        case Some(p) => p.tombstones
+        case None => tombRows.map { rows =>
+          // one single-task job per tombstone listing that stops one
+          // row past the ceiling (a limit over several partitions would
+          // scan them in growing jobs); the set dedups repeated ids
+          val ids = rows.select(col("vec_id"))
+          val head = ids.coalesce(1).limit(SearchEngine.HeldTombstoneMaxRows + 1).collect()
+          if (head.length <= SearchEngine.HeldTombstoneMaxRows) Left(head.map(_.getLong(0)).toSet)
+          else Right(hint(ids.distinct()).persist())
+        }
+      }
       val live = sameTombs.filter(_.segPaths == segs) match {
         case Some(p) => p.liveDelta
         case None => Option.when(segs.nonEmpty)(
           lwwLive(segFrames, deltaColumns.toSeq.sorted,
             tombRows.map(AnnIndex.lastDeletes), hint).persist())
       }
-      val tombstoneIds = sameTombs match {
-        case Some(p) => p.tombstoneIds
-        case None => tombRows.map(_.select(col("vec_id")).distinct().persist())
-      }
       new ServingSnapshot(relations, segs, tombs, relations(docsPath),
-        relations(artPath), deltaColumns, live, tombstoneIds, hint)
+        relations(artPath), deltaColumns, live, tombstones)
     }
   }
 
@@ -474,8 +520,8 @@ final class SearchEngine(
     * reference's tool call actually has (server.py:87 is a
     * `db.index.vector.queryNodes` probe, not a corpus scan): prompt →
     * embed → [[graft.search.AnnIndex.probeIvfPq]] against the persisted
-    * session artifact (cell partition pruning → codes-only ADC
-    * shortlist → exact rescore) → fetch the k hit payloads by id.
+    * session artifact (cell partition pruning → ADC shortlist → exact
+    * top-k, one scan) → fetch the k hit payloads by id.
     *
     * The payload fetch is the index-stores-ids architecture: the probe
     * returns ≤ k (doc_id, score) rows — collected driver-side, bounded
@@ -591,14 +637,15 @@ final class SearchEngine(
     // over union, so the ≤ 2k-row driver merge is exact. (The 500 k
     // ingest probe certifies the route end to end — SCALING.md
     // round-13.)
-    // tombstoned ids are excluded INSIDE the probe's scans (size-gated
-    // anti-join before any ranking), so the main top-k back-fills with
-    // live rows exactly — a deleted document is unserved, not a hole
+    // tombstoned ids are excluded INSIDE the probe's scan (a filter on
+    // the held ids, or an anti-join past the ceiling — before any
+    // ranking), so the main top-k back-fills with live rows exactly — a
+    // deleted document is unserved, not a hole
+    val (predicate, exclude) = snap.liveProbe(filterPredicate(filter))
     val ((mainHits, text), deltaHits) = SearchEngine.overlapped(spark) {
       val hits = graft.search.AnnIndex
         .probeIvfPq(spark, main, qv, k, nProbe, shortlist,
-          predicate = filterPredicate(filter),
-          exclude = snap.tombstoneIds.map(snap.tombstoneHint),
+          predicate = predicate, exclude = exclude,
           artifact = Some(snap.artifact))
         .collect() // ≤ k rows — the bounded driver merge every top-k ends in
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -610,7 +657,7 @@ final class SearchEngine(
       // never wronger" ([[deltaTopK]])
       snap.delta(filter).fold(Seq.empty[(Long, Double, String)]) { d =>
         deltaTopK(d, canonicalIds(sfDir, snap, root, filter),
-            snap.tombstoneIds, s"delta top-$k") { base =>
+            snap.deletedAmong, s"delta top-$k") { base =>
           base
             .withColumn("score", round(neo4jScore(col("embedding"), typedLit(qv.toSeq)), 6))
             .orderBy(desc("score"), asc("doc_id"))
@@ -643,7 +690,7 @@ final class SearchEngine(
     * the pathological all-collisions delta; the served entry points
     * degrade to the exact scan on the loud failure. */
   private def deltaTopK[T](delta: DataFrame, canonical: DataFrame,
-                           tombstoneIds: Option[DataFrame], what: String)
+                           deletedAmong: Seq[Long] => Set[Long], what: String)
                           (top: DataFrame => Seq[T])(idOf: T => Long): Seq[T] = {
     var excluded = Set.empty[Long]
     var out: Option[Seq[T]] = None
@@ -663,12 +710,7 @@ final class SearchEngine(
         else canonical.filter(col("doc_id").isin(ids: _*))
           .select($"doc_id").collect().map(_.getLong(0)).toSet
       val deleted =
-        if (inCanon.isEmpty) Set.empty[Long]
-        else tombstoneIds match {
-          case None => Set.empty[Long]
-          case Some(t) => t.filter(col("vec_id").isin(inCanon.toIndexedSeq: _*))
-            .collect().map(_.getLong(0)).toSet
-        }
+        if (inCanon.isEmpty) Set.empty[Long] else deletedAmong(inCanon.toIndexedSeq)
       val collided = inCanon -- deleted
       if (collided.isEmpty) out = Some(found) else excluded ++= collided
     }
@@ -962,7 +1004,7 @@ final class SearchEngine(
         val qside = broadcast(queries
           .select($"vec_id".as("query_id"), $"embedding".as("qe")))
         val hits = deltaTopK(d, canonicalIds(sfDir, snap, root, filter),
-            snap.tombstoneIds, s"batched delta top-$k") { base =>
+            snap.deletedAmong, s"batched delta top-$k") { base =>
           base.crossJoin(qside)
             .withColumn("score",
               round(neo4jScore(col("embedding"), col("qe")), 6))
@@ -1047,14 +1089,9 @@ final class SearchEngine(
   private def batchProbe(snap: ServingSnapshot, main: String, queries: DataFrame,
                          k: Int, nProbe: Int, shortlist: Int,
                          filter: Seq[(String, Any)]): DataFrame = {
-    val art = snap.artifact
-    val artFiltered =
-      if (filter.isEmpty) art else art.filter(filterPredicate(filter))
-    val mainFrame = snap.tombstoneIds match {
-      case None => artFiltered
-      case Some(t) =>
-        artFiltered.join(snap.tombstoneHint(t), Seq("vec_id"), "left_anti")
-    }
+    val (predicate, exclude) = snap.liveProbe(filterPredicate(filter))
+    val live = snap.artifact.filter(predicate)
+    val mainFrame = exclude.fold(live)(live.join(_, Seq("vec_id"), "left_anti"))
     graft.search.AnnIndex
       .probeIvfPqSegmentsMulti(spark, main, Seq(mainFrame), queries,
         k, nProbe, shortlist)
@@ -1256,11 +1293,11 @@ final class SearchEngine(
   /** Streaming KNN against the PERSISTED IVF-PQ artifact — the
     * compressed sibling of [[streamingKnnVsIvf]]: each micro-batch of
     * query vectors runs [[graft.search.AnnIndex.probeIvfPqMulti]] —
-    * the q151 plan (per-query DPP cell pruning, codes-only ADC
-    * shortlists, exact heap rescore) — so stream results are
-    * definitionally consistent with batch results (asserted in
-    * SearchEngineSpec). Stateless: the artifact carries all corpus
-    * state. */
+    * the q151 plan (per-query DPP cell pruning, one scan scoring ADC
+    * and exact side by side, per-query shortlists, top-k heaps) — so
+    * stream results are definitionally consistent with batch results
+    * (asserted in SearchEngineSpec). Stateless: the artifact carries
+    * all corpus state. */
   def streamingKnnVsIvfPq(queryStream: DataFrame, indexDir: String, k: Int,
                           nProbe: Int, shortlist: Int)
                          (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =

@@ -25,6 +25,53 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The artifact scans of `p` under the directory named `dir`. */
+  private def artifactScans(p: String, dir: String): Seq[String] =
+    p.linesIterator.filter(l => l.contains("Scan parquet") && l.contains(dir)).toSeq
+
+  /** The one-pass single-query IVF-PQ probe: the shortlist by ADC is a
+    * heap over the scan (TakeOrderedAndProject ordered by adc_d), the
+    * exact top-k a second heap over the shortlist (ordered by score),
+    * and nothing joins back onto the cells — no BroadcastExchange, no
+    * join of any kind. `heaps` counts every TakeOrderedAndProject in
+    * the plan (a caller's own top-k merges add to the probe's two). */
+  private def assertOnePassProbe(p: String, heaps: Int = 2): Unit = {
+    val tops = p.linesIterator.filter(_.contains("TakeOrderedAndProject")).toSeq
+    assert(tops.size == heaps &&
+      tops.count(_.contains("orderBy=[adc_d")) == 1 &&
+      tops.count(_.contains("orderBy=[score")) >= 1,
+      s"expected the ADC shortlist heap under an exact-score top-k heap:\n$p")
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      s"the shortlist must never join back onto the cells:\n$p")
+  }
+
+  /** The batched one-pass probe's shortlist: a per-query row_number
+    * over (adc_d, vec_id) whose exchange carries the scored pair
+    * (query_id, vec_id, adc_d, score) only — neither the query vector
+    * nor the embedding crosses the shuffle — and no join on `vec_id`
+    * anywhere (the corpus side's one join is the broadcast
+    * (query × cell) side on `cell`). */
+  private def assertBatchShortlist(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val shortlistShuffles = root.collect {
+      case e: ShuffleExchangeExec if e.output.exists(_.name == "adc_d") => e
+    }
+    assert(shortlistShuffles.size == 1 && shortlistShuffles.forall(e =>
+      e.output.map(_.name).sorted == Seq("adc_d", "query_id", "score", "vec_id")),
+      s"the shortlist shuffle must carry (query_id, vec_id, adc_d, score) only:\n$root")
+    val onVecId = root.collect {
+      case j: BroadcastHashJoinExec
+          if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == "vec_id")) => j
+    }
+    assert(onVecId.isEmpty, s"no join on vec_id may feed the shortlist:\n$root")
+  }
+
   test("q3 global top-k plans as TakeOrderedAndProject, not a full sort") {
     val p = plan("q3_top_orders")
     assert(p.contains("TakeOrderedAndProject"))
@@ -860,30 +907,18 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(p.contains("MapGroups"), s"greedy must run in mapGroups:\n$p")
   }
 
+  // the name predates the one-pass probe: one scan, both top-k heaps, no join
   test("q148 IVF-PQ: cell-pruned scans, codes-only ADC scan, shortlist-bounded rescore") {
     val p = plan("q148_ivfpq_search")
-    val scans = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpq_index")).toSeq
-    assert(scans.size == 2, s"expected ADC + rescore artifact scans:\n$p")
-    // both scans prune to the probed cells via the partition column
+    val scans = artifactScans(p, "graft_ivfpq_index")
+    assert(scans.size == 1, s"expected ONE artifact scan:\n$p")
+    // the scan prunes to the probed cells via the partition column
     scans.foreach(l => assert(
       l.contains("PartitionFilters: [") && l.contains("cell#"),
       s"artifact scan must partition-prune on cell: $l"))
-    // the ADC scan reads ONLY (vec_id, codes) — the raw vectors never
-    // enter it; that is the compression half of the composed layout
-    val adc = scans.filter { l =>
-      val rs = l.substring(l.indexOf("ReadSchema:"))
-      !rs.contains("embedding")
-    }
-    assert(adc.size == 1 && adc.head.contains("c0"),
-      s"exactly one codes-only ADC scan expected:\n$p")
-    // shortlist + final top-k are per-partition heaps; the only join
-    // is the broadcast of the bounded shortlist back onto the cells
-    assert(p.contains("TakeOrderedAndProject"),
-      s"shortlist/top-k must be heaps:\n$p")
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) == 1 &&
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"rescore join must broadcast the shortlist only:\n$p")
+    // shortlist + final top-k are per-partition heaps stacked over the
+    // one scan — the exact score rides each row, so nothing rescans
+    assertOnePassProbe(p)
   }
 
   test("q165 served search: payload fetch is pushed-down point lookups + broadcast of the k hits") {
@@ -958,18 +993,13 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   test("q175 post-fold probe keeps q148's shape against the folded artifact") {
     val p = plan("q175_major_fold")
-    val scans = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_folded_index")).toSeq
-    assert(scans.size == 2, s"expected ADC + rescore folded scans:\n$p")
+    val scans = artifactScans(p, "graft_folded_index")
+    assert(scans.size == 1, s"expected ONE folded-artifact scan:\n$p")
     scans.foreach(l => assert(
       l.contains("PartitionFilters: [") && l.contains("cell#"),
       s"folded scan must partition-prune on cell: $l"))
-    assert(scans.count { l =>
-      !l.substring(l.indexOf("ReadSchema:")).contains("embedding")
-    } == 1, s"exactly one codes-only ADC scan expected:\n$p")
-    assert(p.contains("TakeOrderedAndProject") &&
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"the fold must not change the probe's plan family:\n$p")
+    // the fold must not change the probe's plan family
+    assertOnePassProbe(p)
   }
 
   test("q176 evolving eval: probes stay pruned and broadcast; ground truth heaps map-side") {
@@ -990,6 +1020,7 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"eval joins must broadcast (AQE final plan):\n$p")
   }
 
+  // the name predates the one-pass probe: the probe half pins ONE filtered scan
   test("q177 served filter: label pushed under the cell pruning on both artifact scans") {
     val p = plan("q177_served_filtered")
     // the filter rode the probe (which executed eagerly); the RETURNED
@@ -1003,8 +1034,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"nothing may shuffle in the served fetch:\n$p")
     // and the probe half's pre-filter property on the artifact itself:
     // build the same filtered probe and pin the label PushedFilter
-    // under the cell PartitionFilter on both scans (q152's two bounds,
-    // now reachable from the service surface)
+    // under the cell PartitionFilter on its one scan (q152's two
+    // bounds, now reachable from the service surface)
     val probe = graft.search.AnnIndex.probeIvfPq(spark,
       graft.queries.AnnQueries.ivfPqIndexDir(spark, sf001),
       new graft.search.HashingEmbedder(64)
@@ -1014,33 +1045,33 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       predicate = org.apache.spark.sql.functions.col("label") ===
         graft.queries.AnnQueries.FilterLabel)
       .queryExecution.executedPlan.toString
-    val scans = probe.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpq_index")).toSeq
-    assert(scans.size == 2 && scans.forall(l =>
+    val scans = artifactScans(probe, "graft_ivfpq_index")
+    assert(scans.size == 1 && scans.forall(l =>
       l.contains("PartitionFilters: [") && l.contains("cell#") &&
         l.contains(s"EqualTo(label,${graft.queries.AnnQueries.FilterLabel})")),
-      s"label must push under the cell pruning on both scans:\n${scans.mkString("\n")}")
+      s"label must push under the cell pruning on the one scan:\n${scans.mkString("\n")}")
+    assertOnePassProbe(probe)
   }
 
+  // the name predates the one-pass probe: one DPP-pruned scan, no join-back;
+  // the shortlist window itself is not limited (1,300 is above the threshold)
   test("q151 batched IVF-PQ: DPP on both artifact reads, codes-only ADC, limited shortlist") {
-    val p = plan("q151_ivfpq_multiprobe")
+    val df = SparkEntry.queries("q151_ivfpq_multiprobe")(spark, sf001)
+    val p = df.queryExecution.executedPlan.toString
     // dedup by scan body: the DPP subquery echoes its build subtree in
-    // the dump, so the codes scan can print twice from one node
-    val scans = p.linesIterator.filter(l =>
-        l.contains("Scan parquet") && l.contains("graft_ivfpq_index"))
-      .map(l => l.substring(l.indexOf("FileScan"))).toSeq.distinct
-    assert(scans.size == 2, s"expected ADC + rescore artifact scans:\n$p")
-    // both artifact reads prune to the union of probed cells via
-    // dynamic partition pruning from the broadcast query/shortlist side
+    // the dump, so the scan can print twice from one node
+    val scans = artifactScans(p, "graft_ivfpq_index")
+      .map(l => l.substring(l.indexOf("FileScan"))).distinct
+    assert(scans.size == 1, s"expected ONE artifact scan:\n$p")
+    // the artifact read prunes to the union of probed cells via
+    // dynamic partition pruning from the broadcast query side
     scans.foreach(l => assert(
       l.contains("PartitionFilters: [") && l.contains("dynamicpruning"),
       s"artifact scan must DPP-prune on cell: $l"))
-    assert(scans.count { l =>
-      !l.substring(l.indexOf("ReadSchema:")).contains("embedding")
-    } == 1, s"exactly one codes-only ADC scan expected:\n$p")
-    // per-query shortlist rank must push down map-side
+    // the per-query cell rank pushes down map-side
     assert(p.contains("WindowGroupLimit"),
-      s"shortlist rank must be window-group-limited:\n$p")
+      s"cell rank must be window-group-limited:\n$p")
+    assertBatchShortlist(df)
     // exact top-k via the map-side partial top-k aggregate, never a
     // corpus-wide window over scored candidates
     assert(p.contains("partial_topkagg"),
@@ -1049,11 +1080,11 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       s"all joins must broadcast:\n$p")
   }
 
+  // the name predates the one-pass probe: ONE pruned, label-filtered scan
   test("q152 filtered IVF-PQ: label pushed into both pruned scans, codes-only ADC") {
     val p = plan("q152_filtered_ivfpq")
-    val scans = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpq_index")).toSeq
-    assert(scans.size == 2, s"expected ADC + rescore artifact scans:\n$p")
+    val scans = artifactScans(p, "graft_ivfpq_index")
+    assert(scans.size == 1, s"expected ONE artifact scan:\n$p")
     scans.foreach { l =>
       // partition pruning on cell AND the metadata predicate reaching
       // the parquet reader as a pushed data filter — the pre-filter
@@ -1063,65 +1094,38 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
       assert(l.contains(s"EqualTo(label,${graft.queries.AnnQueries.FilterLabel})"),
         s"label predicate must reach the reader as a PushedFilter: $l")
     }
-    val adc = scans.filter { l =>
-      !l.substring(l.indexOf("ReadSchema:")).contains("embedding")
-    }
-    assert(adc.size == 1 && adc.head.contains("c0"),
-      s"exactly one codes-only ADC scan expected:\n$p")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"shortlist/top-k must be heaps:\n$p")
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) == 1 &&
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"rescore join must broadcast the shortlist only:\n$p")
+    assertOnePassProbe(p)
   }
 
+  // the name predates the one-pass probe: one scan per segment, no shortlist join
   test("q153 compaction: both segments cell-pruned, codes-only ADC on each, one shortlist join") {
     val p = plan("q153_ivfpq_compact")
-    val main = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpqmain_index")).toSeq
-    val seg = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpqdelta_segment")).toSeq
-    // each segment is scanned twice: once codes-only for ADC, once for
-    // the exact rescore — and ALL FOUR scans partition-prune on cell
-    // (q150's exact full delta scan is retired; the delta now reads
-    // nProbe/cells of its directories like any indexed segment)
-    assert(main.size == 2 && seg.size == 2,
-      s"expected 2 main + 2 delta-segment scans:\n$p")
+    val main = artifactScans(p, "graft_ivfpqmain_index")
+    val seg = artifactScans(p, "graft_ivfpqdelta_segment")
+    // each segment is scanned ONCE — ADC distance and exact score side
+    // by side — and both scans partition-prune on cell (q150's exact
+    // full delta scan is retired; the delta reads nProbe/cells of its
+    // directories like any indexed segment)
+    assert(main.size == 1 && seg.size == 1,
+      s"expected 1 main + 1 delta-segment scan:\n$p")
     (main ++ seg).foreach(l => assert(
       l.contains("PartitionFilters: [") && l.contains("cell#"),
       s"segment scan must partition-prune on cell: $l"))
-    assert((main ++ seg).count { l =>
-      !l.substring(l.indexOf("ReadSchema:")).contains("embedding")
-    } == 2, s"one codes-only ADC scan per segment expected:\n$p")
     assert(p.contains("Union"), s"segments must union, not join:\n$p")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"shortlist/top-k must be heaps:\n$p")
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) == 1 &&
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"rescore join must broadcast the one union-wide shortlist:\n$p")
+    // one shortlist heap ranks the union, one exact top-k heap over it
+    assertOnePassProbe(p)
   }
 
   test("q154 residual IVF-PQ: q148's plan shape over the residual artifact") {
     val p = plan("q154_ivfpq_residual")
-    val scans = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpqres_index")).toSeq
-    assert(scans.size == 2, s"expected ADC + rescore artifact scans:\n$p")
+    val scans = artifactScans(p, "graft_ivfpqres_index")
+    assert(scans.size == 1, s"expected ONE residual-artifact scan:\n$p")
     scans.foreach(l => assert(
       l.contains("PartitionFilters: [") && l.contains("cell#"),
       s"artifact scan must partition-prune on cell: $l"))
-    // the residual-ADC scan is still codes-only: the per-(cell, code)
-    // lookup tables are broadcast literals indexed by the partition
-    // column — no join, no embedding read
-    val adc = scans.filter { l =>
-      !l.substring(l.indexOf("ReadSchema:")).contains("embedding")
-    }
-    assert(adc.size == 1 && adc.head.contains("c0"),
-      s"exactly one codes-only residual-ADC scan expected:\n$p")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"shortlist/top-k must be heaps:\n$p")
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) == 1 &&
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"rescore join must broadcast the shortlist only:\n$p")
+    // the per-(cell, code) lookup tables are literals indexed by the
+    // partition column — row-local in the one scan, no join
+    assertOnePassProbe(p)
   }
 
   test("q155 perceptual-hash dedup: one band equi-join, no pair enumeration, blobs stay put") {
@@ -1249,25 +1253,19 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
 
   test("q150 main+delta search: pruned main artifact, exact delta scan, top-k merge") {
     val p = plan("q150_ivfpq_delta")
-    // main side = the q148 shape against the MAIN-built artifact:
-    // both scans cell-pruned, one of them codes-only
-    val scans = p.linesIterator.filter(l =>
-      l.contains("Scan parquet") && l.contains("graft_ivfpqmain_index")).toSeq
-    assert(scans.size == 2, s"expected ADC + rescore main-artifact scans:\n$p")
+    // main side = the q148 shape against the MAIN-built artifact: one
+    // cell-pruned scan
+    val scans = artifactScans(p, "graft_ivfpqmain_index")
+    assert(scans.size == 1, s"expected ONE main-artifact scan:\n$p")
     scans.foreach(l => assert(
       l.contains("PartitionFilters: [") && l.contains("cell#"),
       s"main-artifact scan must partition-prune on cell: $l"))
-    assert(scans.count { l =>
-      !l.substring(l.indexOf("ReadSchema:")).contains("embedding")
-    } == 1, s"exactly one codes-only ADC scan expected:\n$p")
     // the delta side is one exact scan of the fixture embeddings; the
     // sides merge with a Union of two top-k's — no join between them
     assert(p.contains("Union"), s"expected the main/delta top-k merge:\n$p")
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) == 1 &&
-      !p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      s"only the shortlist rescore may join:\n$p")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"every top-k must be per-partition heaps:\n$p")
+    // every top-k is a per-partition heap: the probe's two, the delta
+    // side's one and the merge's one
+    assertOnePassProbe(p, heaps = 4)
   }
 
   test("q147 sketch-only profile: bounded-state partial aggregate, no join, no window") {
@@ -1361,13 +1359,14 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     // silent fallback to per-prompt plans would multiply the artifact
     // scans by the batch size and only answer-equality would notice,
     // at fixture scale. Pin the probe frame searchIndexedBatch
-    // collects: the artifact scan set must be ONE ADC + rescore pair
-    // regardless of prompt count.
+    // collects: the artifact scan set must be ONE scan regardless of
+    // prompt count.
     val eng = new graft.search.SearchEngine(spark)
     def artScans(n: Int): Seq[String] = {
-      val p = eng.batchMainProbeFrame(sf001,
-          graft.queries.AnnQueries.BatchServedPrompts.take(n), 10)
-        .queryExecution.executedPlan.toString
+      val frame = eng.batchMainProbeFrame(sf001,
+        graft.queries.AnnQueries.BatchServedPrompts.take(n), 10)
+      assertBatchShortlist(frame)
+      val p = frame.queryExecution.executedPlan.toString
       assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
         s"batched probe joins must broadcast:\n$p")
       assert(p.contains("partial_topkagg"),
@@ -1379,8 +1378,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
     val one = artScans(1)
     val three = artScans(3)
-    assert(three.size == 2,
-      s"expected ONE ADC + rescore artifact scan pair for the whole batch:\n${three.mkString("\n")}")
+    assert(three.size == 1,
+      s"expected ONE artifact scan for the whole batch:\n${three.mkString("\n")}")
     assert(one.size == three.size,
       "the artifact scan count must not scale with the prompt count")
   }
@@ -1424,8 +1423,8 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
     val one = epochScans(1)
     val three = epochScans(3)
-    assert(three.size == 2,
-      s"expected ONE ADC + rescore epoch-artifact scan pair for the whole batch:\n${three.mkString("\n")}")
+    assert(three.size == 1,
+      s"expected ONE epoch-artifact scan for the whole batch:\n${three.mkString("\n")}")
     assert(one.size == three.size,
       "the epoch-artifact scan count must not scale with the prompt count")
     // all artifact scans read the SAME pointer-resolved generation —

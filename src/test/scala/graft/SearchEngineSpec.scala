@@ -1124,10 +1124,10 @@ class SearchEngineSpec extends SparkSpec {
       eng.searchJsonRoot(sf0001, root, prompt, 10)
       eng.searchJsonBatchRoot(sf0001, root, Seq(prompt, AnnQueries.ServedPrompt), 10)
       val snap = SearchEngine.snapshots.current(appId, root).get
-      for ((what, frame) <- Seq("tombstone ids" -> snap.tombstoneIds,
-                                "live delta" -> snap.liveDelta))
-        assert(frame.get.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-          s"ingest $b: the snapshot's $what must be cached")
+      // a handful of tombstones is held as an id set, not a frame
+      assert(snap.tombstones.exists(_.isLeft), s"ingest $b: the tombstone ids must be held")
+      assert(snap.liveDelta.get.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        s"ingest $b: the snapshot's live delta must be cached")
       val own = (persisted() -- others).size
       if (b == 0L) { afterFirst = own; stores = SearchEngine.snapshots.entryCount(appId) }
       assert(own === afterFirst,
@@ -1246,5 +1246,148 @@ class SearchEngineSpec extends SparkSpec {
       }).get()
       assert(poolExec === null, s"$face $round: the serve thread kept execution id $poolExec")
     }
+  }
+
+  test("a warm served single probes in one Spark job; tombstone ids are collected once per tombstone listing") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{SQLExecution, SparkPlanInfo}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    // a short root path: scan locations print truncated in plan info
+    val root = java.nio.file.Files.createTempDirectory("g1job").toString + "/r"
+    ServingRoot.init(spark, AnnQueries.ivfPqIndexDir(spark, sf0001), root)
+    val (idx, delta) = ServingRoot.resolve(spark, root)
+    val prompt = "one job probe spec fresh document"
+    AnnIndex.appendDeltaBatch(spark, idx, delta,
+      Seq((980000201L, new HashingEmbedder(64).embed(prompt).toSeq, prompt))
+        .toDF("vec_id", "embedding", "text"), 0L, compactEvery = 0)
+    AnnIndex.appendTombstones(spark, delta, Seq(5L, 7L).toDF("vec_id"), 1L, compactEvery = 0)
+    val eng = new SearchEngine(spark)
+    val sc = spark.sparkContext
+    // plan info trees include AQE stages and the plans behind cached
+    // relations
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    def scans(p: SparkPlanInfo): Seq[String] = nodes(p)
+      .filter(_.nodeName.startsWith("Scan parquet"))
+      .map(_.metadata.getOrElse("Location", ""))
+    // one served call: every SQL execution's plan and its job count
+    def serve(): Seq[(SparkPlanInfo, Int)] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, SparkPlanInfo)]
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+      val l = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.executionId -> s.sparkPlanInfo)
+          case _ =>
+        }
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+            .foreach(id => jobs.add(id.toLong))
+      }
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      sc.addSparkListener(l)
+      try {
+        val before = eng.indexFallbackCount.get
+        val out = eng.searchJsonRoot(sf0001, root, prompt, 10)
+        assert(eng.indexFallbackCount.get === before, "the index route must serve")
+        assert(out.contains("\"doc_id\":980000201,"), out)
+        org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      } finally sc.removeSparkListener(l)
+      val perExec = jobs.asScala.groupBy(identity).map { case (id, js) => id -> js.size }
+      plans.asScala.toSeq.map { case (id, p) => (p, perExec.getOrElse(id, 0)) }
+    }
+    // the id collect reads the tombstone store and nothing else, in
+    // one job however many segments the store has
+    def idCollects(call: Seq[(SparkPlanInfo, Int)]): Int = {
+      val collects = call.filter { case (p, _) =>
+        val s = scans(p)
+        s.nonEmpty && s.forall(_.contains("/tombstones"))
+      }
+      collects.foreach { case (_, jobs) => assert(jobs === 1, s"the id collect ran $jobs jobs") }
+      collects.size
+    }
+    def probes(call: Seq[(SparkPlanInfo, Int)]): Seq[(SparkPlanInfo, Int)] =
+      call.filter { case (p, _) => nodes(p).exists(_.simpleString.contains("adc_d")) }
+    val first = serve()
+    assert(idCollects(first) === 1, "the first call on a listing collects the tombstone ids")
+    for (round <- 1 to 2) {
+      val warm = serve()
+      assert(idCollects(warm) === 0, s"warm call $round: no tombstone-id collect on the same listing")
+      val probe = probes(warm)
+      assert(probe.size === 1, s"warm call $round: one probe execution, got ${probe.size}")
+      assert(probe.head._2 === 1,
+        s"warm call $round: the probe must run ONE job, ran ${probe.head._2}")
+      assert(!nodes(probe.head._1).exists(_.nodeName.contains("Join")),
+        s"warm call $round: held tombstones must filter, not join")
+    }
+    AnnIndex.appendTombstones(spark, delta, Seq(11L).toDF("vec_id"), 2L, compactEvery = 0)
+    assert(idCollects(serve()) === 1, "a new tombstone listing collects its ids exactly once")
+    assert(idCollects(serve()) === 0, "and the next call reuses them")
+  }
+
+  test("past HeldTombstoneMaxRows a served probe anti-joins a cached, broadcast tombstone frame") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.storage.StorageLevel
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    val root = java.nio.file.Files.createTempDirectory("graft_held_ceiling_spec").toString + "/r"
+    ServingRoot.init(spark, AnnQueries.ivfPqIndexDir(spark, sf0001), root)
+    val (idx, delta) = ServingRoot.resolve(spark, root)
+    val prompt = "held ceiling spec fresh document"
+    AnnIndex.appendDeltaBatch(spark, idx, delta,
+      Seq((980000301L, new HashingEmbedder(64).embed(prompt).toSeq, prompt))
+        .toDF("vec_id", "embedding", "text"), 0L, compactEvery = 0)
+    val eng = new SearchEngine(spark)
+    val appId = spark.sparkContext.applicationId
+    def exclusion() = SearchEngine.snapshots.current(appId, root).get.tombstones
+    def ids(json: String) = "\"doc_id\":(\\d+)".r.findAllMatchIn(json).map(_.group(1).toLong).toSeq
+    // one real delete: a corpus hit of the prompt's answer
+    val victim = ids(eng.searchJsonRoot(sf0001, root, prompt, 10)).find(_ != 980000301L).get
+    AnnIndex.appendTombstones(spark, delta, Seq(victim).toDF("vec_id"), 1L, compactEvery = 0)
+    val single = eng.searchJsonRoot(sf0001, root, prompt, 10)
+    val batch = eng.searchJsonBatchRoot(sf0001, root, Seq(prompt, AnnQueries.ServedPrompt), 10)
+    assert(!ids(single).contains(victim), single)
+    assert(exclusion().exists(_.isLeft), "one tombstone is held as an id set")
+    // the ceiling's worth of scattered ids outside the corpus: the
+    // answers must not move, only the exclusion's form
+    AnnIndex.appendTombstones(spark, delta,
+      spark.range(SearchEngine.HeldTombstoneMaxRows).select(
+        (pmod(col("id") * 2654435761L, lit(3000000000L)) + 4000000000L).as("vec_id")),
+      2L, compactEvery = 0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             d: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(eng.searchJsonRoot(sf0001, root, prompt, 10) === single)
+      assert(eng.searchJsonBatchRoot(sf0001, root, Seq(prompt, AnnQueries.ServedPrompt), 10) === batch)
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val frame = exclusion() match {
+      case Some(Right(f)) => f
+      case other => fail(s"past the ceiling the ids must stay a frame, got $other")
+    }
+    assert(frame.storageLevel != StorageLevel.NONE, "the tombstone frame must be cached")
+    val probes = plans.asScala.toSeq.filter(_.contains("adc_d"))
+    assert(probes.size === 2, probes.mkString("\n\n"))
+    probes.foreach { p =>
+      assert(p.linesIterator.exists(l => l.contains("BroadcastHashJoin") && l.contains("LeftAnti")),
+        s"the probe must anti-join the broadcast tombstone frame:\n$p")
+      assert("vec_id#\\d+L INSET".r.findFirstIn(p).isEmpty,
+        s"no held id filter past the ceiling:\n$p")
+    }
+    // the next listing releases the frame it does not carry over
+    AnnIndex.appendTombstones(spark, delta, Seq(victim).toDF("vec_id"), 3L, compactEvery = 0)
+    assert(eng.searchJsonRoot(sf0001, root, prompt, 10) === single)
+    assert(frame.storageLevel === StorageLevel.NONE, "the replaced snapshot's frame is released")
+    assert(exclusion().exists(_.isRight))
   }
 }
