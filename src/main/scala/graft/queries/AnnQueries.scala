@@ -641,9 +641,8 @@ object AnnQueries {
         .filter(hasDim(col("embedding"), 64))
         .filter(splitBucket(col("vec_id")) >= DeltaBucketMin)
         .select(col("vec_id"), col("embedding"), col("label"))
-      graft.search.AnnIndex
-        .encodeSegment(s, ivfPqMainIndexDir(s, dir), delta)
-        .write.mode("overwrite").partitionBy("cell").parquet(out)
+      graft.search.AnnIndex.writeByCell(
+        graft.search.AnnIndex.encodeSegment(s, ivfPqMainIndexDir(s, dir), delta), out)
       out
     }
 

@@ -248,15 +248,31 @@ object AnnIndex {
     IvfIndex(model, if (cache) assigned.cache() else assigned)
   }
 
+  /** THE cell-partitioned writer every artifact corpus and delta
+    * segment goes through ([[saveIvf]], [[saveIvfPq]],
+    * [[saveIvfPqResidual]], [[majorCompact]], the q153 compacted
+    * segment): `df` written PARTITIONED BY `cell` after a REBALANCE on
+    * `cell`. The rebalance sends each cell's rows to one shuffle
+    * partition, so a small corpus lands as one file per cell (2,000
+    * rows from the 32 KMeans fit partitions: 16 files instead of 471
+    * when every upstream partition wrote its own slice of every cell);
+    * at scale adaptive execution splits a cell past the advisory
+    * partition size into several advisory-size files instead of
+    * sending the whole cell through one task, which is what a plain
+    * `repartition(cell)` does. */
+  private[graft] def writeByCell(df: DataFrame, dir: String): Unit =
+    df.hint("rebalance", col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+
   /** Persist an IVF index as the 100 TB layout this file's scaladoc
     * promises: the KMeans quantizer plus the corpus written PARTITIONED
-    * BY cell, so a probe's `cell IN (...)` predicate becomes partition
-    * pruning — nProbe/cells of the directories are ever listed, let
-    * alone read. */
+    * BY cell ([[writeByCell]]), so a probe's `cell IN (...)` predicate
+    * becomes partition pruning — nProbe/cells of the directories are
+    * ever listed, let alone read. */
   def saveIvf(idx: IvfIndex, dir: String): Unit = {
     idx.model.write.overwrite().save(s"$dir/model")
-    idx.assigned.drop("features") // ML vectors don't round-trip parquet
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
+    // ML vectors don't round-trip parquet
+    writeByCell(idx.assigned.drop("features"), s"$dir/corpus")
   }
 
   /** Probe a PERSISTED IVF index straight off its parquet layout: pick
@@ -289,7 +305,10 @@ object AnnIndex {
     * a probe can rebuild its lookup tables without refitting. At scale
     * the probe reads only the probed cell directories, ranking each
     * row by its codes and scoring it exactly in the same pass
-    * ([[probeIvfPq]]). */
+    * ([[probeIvfPq]]). The corpus goes through [[writeByCell]] (one
+    * file per cell at fixture size), and the same write pass observes
+    * the epoch's mean PQ distortion into `stats`
+    * ([[writeCorpusAndStats]]) — no second scan. */
   def saveIvfPq(idx: IvfIndex, codebooks: Seq[Seq[Seq[Double]]], subDim: Int,
                 dir: String): Unit = {
     idx.model.write.overwrite().save(s"$dir/model")
@@ -298,7 +317,7 @@ object AnnIndex {
         df.withColumn(s"c$sub", graft.operators.SemDedup.assignCell(
           slice(col("embedding"), sub * subDim + 1, subDim), cents))
       }
-    withCodes.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
+    writeCorpusAndStats(withCodes, codebooks, dir)
     val spark = idx.assigned.sparkSession
     import spark.implicits._
     codebooks.zipWithIndex
@@ -488,7 +507,7 @@ object AnnIndex {
           slice(col("resid"), sub * subDim + 1, subDim), cents))
       }.drop("resid")
       idx.model.write.overwrite().save(s"$dir/model")
-      withCodes.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
+      writeByCell(withCodes, s"$dir/corpus")
       codebooks.zipWithIndex
         .flatMap { case (cents, sub) =>
           cents.zipWithIndex.map { case (ce, cell) => (sub, cell, ce) }
@@ -547,7 +566,7 @@ object AnnIndex {
     * codes, with NO refitting (exactly what a store does when a delta
     * segment graduates into the index between full rebuilds; the main
     * segment's files are never touched). Output carries the input
-    * columns + `cell` + `c0..c{m-1}` — write it `partitionBy("cell")`
+    * columns + `cell` + `c0..c{m-1}` — write it through [[writeByCell]]
     * and it probes like the main corpus. Cost is O(delta): one pass
     * over the new rows against broadcast-literal centers/codebooks. */
   def encodeSegment(spark: SparkSession, indexDir: String, rows: DataFrame): DataFrame = {
@@ -833,38 +852,78 @@ object AnnIndex {
     * after a grace period — [[majorFoldPublish]] runs the full
     * discipline over a [[servingRoot]]; a crash anywhere leaves the
     * old artifact + delta fully serving and the fold simply reruns
-    * (mode overwrite — idempotent). */
+    * (mode overwrite — idempotent).
+    *
+    * The quantizer and codebooks are byte-copied ([[copyArtifact]]);
+    * the folded corpus goes through [[writeByCell]], and that one
+    * write pass also observes the epoch's `stats`
+    * ([[writeCorpusAndStats]]). */
   def majorCompact(spark: SparkSession, indexDir: String, deltaDir: String,
                    outDir: String): Unit = {
     // quantizer + codebooks carry over unchanged (no refit — step 2)
-    loadQuantizer(spark, indexDir).write.overwrite().save(s"$outDir/model")
-    spark.read.parquet(s"$indexDir/codebooks")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/codebooks")
+    copyArtifact(spark, indexDir, outDir, Seq("model", "codebooks"))
     // the fold rewrites EXACTLY what probes serve ([[lsmLiveSegments]]
     // — one definition of liveness); schemas differ by payload columns
     // (main may carry label, the delta text) — the union keeps both,
     // null where absent, and the per-row batch stamp is dropped (a
     // folded corpus is a fresh epoch)
-    lsmLiveSegments(spark, indexDir, deltaDir)
+    val live = lsmLiveSegments(spark, indexDir, deltaDir)
       .reduce(_.unionByName(_, allowMissingColumns = true))
       .drop(graft.sources.SegmentStore.BatchCol)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$outDir/corpus")
-    writeEpochStats(spark, outDir)
+    writeCorpusAndStats(live, codebookList(spark, indexDir), outDir)
   }
 
-  /** Persist the epoch's own mean PQ distortion as artifact metadata
-    * (`stats` — one row) at fold/refit time, when the corpus is being
-    * scanned anyway — so the [[refitIfDrifted]] gauge's DENOMINATOR
-    * is a metadata read, not a re-scan of main on every actuation
-    * check (round-15 verdict "What's missing #4": at 100 TB the check
-    * must be O(delta)). */
-  private def writeEpochStats(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
-    val m = meanDistortion(spark, dir,
-      spark.read.parquet(s"$dir/corpus").select(col("embedding")))
-    Seq(m).toDF("mean_distortion")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+  /** Write an epoch's corpus through [[writeByCell]] and, in the SAME
+    * pass (`Dataset.observe`), its mean PQ distortion under
+    * `codebooks` ([[distortionCol]], the statistic
+    * [[meanDistortion]] computes) as artifact metadata: `stats`, one
+    * row — so the [[refitIfDrifted]] gauge's DENOMINATOR is a metadata
+    * read, not a re-scan of main on every actuation check (at 100 TB
+    * the check must be O(delta)), and writing it costs no scan of its
+    * own. An empty corpus has no mean and gets no `stats`; the gauge
+    * re-derives it ([[readEpochStats]]' None). */
+  private def writeCorpusAndStats(corpus: DataFrame,
+                                  codebooks: Seq[Seq[Seq[Double]]],
+                                  dir: String): Unit = {
+    val stats = org.apache.spark.sql.Observation("epoch_stats")
+    writeByCell(corpus.observe(stats,
+      avg(distortionCol(codebooks)).as("mean_distortion")), s"$dir/corpus")
+    stats.get("mean_distortion") match {
+      case m: Double =>
+        val spark = corpus.sparkSession
+        import spark.implicits._
+        Seq(m).toDF("mean_distortion")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+      case _ =>
+    }
+  }
+
+  /** Byte-copy the `parts` subdirectories of artifact `fromDir` that
+    * exist into `toDir` as ONE Spark job over the file listing, one
+    * task per file: parquet is neither decoded nor re-encoded, and no
+    * byte streams through the driver. Each target subdirectory is
+    * deleted first, so a rerun after a crash replaces a partial copy. */
+  private def copyArtifact(spark: SparkSession, fromDir: String, toDir: String,
+                           parts: Seq[String]): Unit = {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(hconf)
+    val base = fs.makeQualified(new Path(fromDir)).toString + "/"
+    val files = parts.map(p => new Path(s"$fromDir/$p")).filter(fs.exists).flatMap { d =>
+      val it = fs.listFiles(d, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSeq
+    }
+    require(files.forall(_.startsWith(base)), s"artifact listing outside $base")
+    parts.foreach(p => fs.delete(new Path(s"$toDir/$p"), true))
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val pairs = files.map(f => f -> s"$toDir/${f.stripPrefix(base)}")
+    spark.sparkContext.parallelize(pairs, math.max(1, pairs.size)).foreach {
+      case (src, dst) =>
+        val (s, d) = (new Path(src), new Path(dst))
+        if (!FileUtil.copy(s.getFileSystem(conf.value), s,
+            d.getFileSystem(conf.value), d, false, true, conf.value))
+          throw new IllegalStateException(s"artifact copy failed: $s -> $d")
+    }
   }
 
   /** The persisted epoch mean distortion, or None for an artifact
@@ -1012,17 +1071,28 @@ object AnnIndex {
           s"embedder stamp failed: rename($tmp, $dst) returned false")
     }
 
-    /** Seed a fresh root from an existing artifact: fold it (with its
-      * empty delta) into `epoch_0`, stamp the embedder signature when
-      * the caller provides one, and publish the first pointer. */
+    /** Seed a fresh root from an existing artifact: byte-copy its
+      * `model`, `codebooks`, `corpus` and `stats` into `epoch_0`
+      * ([[copyArtifact]] — one Spark job, one task per file, nothing
+      * decoded or rewritten; folding the artifact with its empty
+      * delta would serve the same rows after a full rewrite), stamp
+      * the embedder signature when the caller provides one, and
+      * publish the first pointer. A partial `epoch_0` left by a
+      * crashed init is deleted first. An artifact written before
+      * epoch stats existed is copied without `stats`; the refit gauge
+      * then re-derives the mean ([[readEpochStats]]' None). */
     def init(spark: SparkSession, fromIndexDir: String, rootDir: String,
              embedderSig: Option[String] = None): Unit = {
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
       require(currentEpoch(fs, rootDir).isEmpty,
         s"serving root $rootDir already has a published epoch")
-      majorCompact(spark, fromIndexDir, deltaDir(rootDir, -1L),
-        indexDir(rootDir, 0L))
+      val parts = Seq("model", "codebooks", "corpus")
+      parts.foreach(p => require(fs.exists(new org.apache.hadoop.fs.Path(
+        s"$fromIndexDir/$p")), s"artifact $fromIndexDir has no $p"))
+      val epoch0 = indexDir(rootDir, 0L)
+      fs.delete(new org.apache.hadoop.fs.Path(epoch0), true)
+      copyArtifact(spark, fromIndexDir, epoch0, parts :+ "stats")
       embedderSig.foreach(stampEmbedder(fs, rootDir, _))
       publish(fs, rootDir, 0L)
     }
@@ -1127,19 +1197,29 @@ object AnnIndex {
     * across subspaces, averaged over rows. One scan, row-local codegen
     * argmin over the broadcast-literal centroids — no fits, no joins. */
   def meanDistortion(spark: SparkSession, indexDir: String,
-                     rows: DataFrame): Double = {
-    val cb = loadCodebooks(spark, indexDir)
-    val subs = cb.keys.toSeq.sorted
-    val subDim = cb(subs.head).head.size
-    val dcols = subs.map { sub =>
+                     rows: DataFrame): Double =
+    rows.select(avg(distortionCol(codebookList(spark, indexDir))))
+      .head().getDouble(0)
+
+  /** A row's PQ distortion under `codebooks` (sub-ordered): per
+    * subspace the squared distance of its `embedding` slice to the
+    * nearest centroid, summed — the ONE per-row definition shared by
+    * [[meanDistortion]] and the epoch-stats observation of
+    * [[writeCorpusAndStats]]. */
+  private def distortionCol(codebooks: Seq[Seq[Seq[Double]]]): Column = {
+    val subDim = codebooks.head.head.size
+    codebooks.zipWithIndex.map { case (cents, sub) =>
       val slc = slice(col("embedding"), sub * subDim + 1, subDim)
-      val cents = cb(sub)
       graft.expressions.VectorExpressions.sqDist(slc,
         element_at(typedLit(cents.map(_.toSeq)),
           graft.operators.SemDedup.assignCell(slc, cents) + 1))
-    }
-    rows.select(dcols.reduce(_ + _).as("_d"))
-      .agg(avg(col("_d"))).head().getDouble(0)
+    }.reduce(_ + _)
+  }
+
+  /** `dir`'s persisted codebooks in subspace order. */
+  private def codebookList(spark: SparkSession, dir: String): Seq[Seq[Seq[Double]]] = {
+    val cb = loadCodebooks(spark, dir)
+    cb.keys.toSeq.sorted.map(cb)
   }
 
   /** REFIT — the rebuild [[majorCompact]] deliberately is not: fold
@@ -1153,7 +1233,9 @@ object AnnIndex {
     * would freeze the decay in — the refit re-derives it from the
     * corpus the index actually serves now. Write-only, same
     * crash-anywhere contract as [[majorCompact]]; publish through
-    * [[refitIfDrifted]] (or a caller's own pointer swap). */
+    * [[refitIfDrifted]] (or a caller's own pointer swap). The new
+    * epoch's `stats` come from [[saveIvfPq]]'s write pass, under the
+    * fresh codebooks — no separate scan. */
   def refit(spark: SparkSession, indexDir: String, deltaDir: String,
             outDir: String, cells: Int, subDim: Int, pqK: Int,
             pqIters: Int): Unit = {
@@ -1175,9 +1257,6 @@ object AnnIndex {
         pqK, pqIters)
     }
     saveIvfPq(idx, codebooks, subDim, outDir)
-    // the refitted epoch's own mean distortion, persisted while the
-    // corpus is hot — the next gauge check reads it back O(1)
-    writeEpochStats(spark, outDir)
   }
 
   /** REFIT ACTUATION over a serving root — the gauge and the rebuild
@@ -1216,10 +1295,10 @@ object AnnIndex {
     // relative drift, and the refit itself is always safe.
     val num = meanDistortion(spark, idxDir, deltaRows)
     // denominator: the epoch corpus's own mean distortion — PERSISTED
-    // at fold/refit time ([[writeEpochStats]]), so the actuation check
-    // scans ONLY the delta rows (O(delta), the 100 TB requirement);
-    // an epoch written before stats existed re-derives it from the
-    // live main frame once. The persisted mean is over the epoch's
+    // when the epoch's corpus was written ([[writeCorpusAndStats]]), so
+    // the actuation check scans ONLY the delta rows (O(delta), the
+    // 100 TB requirement); an epoch written before stats existed
+    // re-derives it from the live main frame once. The persisted mean is over the epoch's
     // full corpus while the live frame excludes post-epoch tombstones
     // — a second-order difference in a gauge whose trip margin is
     // orders of magnitude (in-distribution ~1.0 vs a planted shift

@@ -32,6 +32,20 @@ object SearchEngine {
     * degrades to the exact scan). */
   val MaxCollisionPasses = 8
 
+  /** `c IN ids` over a bigint id column as an `InSet`, however few the
+    * ids. `isin` plans a list at or below
+    * `spark.sql.optimizer.inSetConversionThreshold` (10) as an `In`
+    * whose generated code inlines each id as a branch, so every served
+    * call with different hits compiles fresh classes; an `InSet`'s
+    * generated code holds the set as a reference object and compiles
+    * once. It still pushes into the parquet scan as `In`. An empty
+    * list keeps `isin()`'s semantics (false, null on a null id). */
+  private[graft] def idIn(c: Column, ids: Iterable[Long]): Column =
+    if (ids.isEmpty) c.isin()
+    else org.apache.spark.sql.GraftBridge.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.GraftBridge.expression(c), ids.toSet[Any]))
+
   /** The most tombstone rows a serving snapshot holds driver-side as
     * a scan filter ([[ServingSnapshot.liveProbe]]); past it the probes
     * anti-join the distinct ids as a frame, broadcast under
@@ -103,11 +117,11 @@ object SearchEngine {
 
     /** A probe's tombstone exclusion, as (scan predicate, frame to
       * anti-join): held ids fold into `predicate` as
-      * `!vec_id.isin(ids)` — an In filter (an InSet past 10 ids) in the
+      * `!vec_id IN ids` — an InSet filter ([[SearchEngine.idIn]]) in the
       * scan's stage, with no join, no exchange and no job; a frame goes
       * to the probe's anti-join. */
     def liveProbe(predicate: Column): (Column, Option[DataFrame]) = tombstones match {
-      case Some(Left(ids)) => (predicate && !col("vec_id").isin(ids.toSeq: _*), None)
+      case Some(Left(ids)) => (predicate && !SearchEngine.idIn(col("vec_id"), ids), None)
       case other => (predicate, other.flatMap(_.toOption))
     }
 
@@ -117,7 +131,7 @@ object SearchEngine {
       case None => Set.empty
       case Some(Left(held)) => ids.filter(held).toSet
       case Some(Right(t)) =>
-        t.filter(col("vec_id").isin(ids: _*)).collect().map(_.getLong(0)).toSet
+        t.filter(SearchEngine.idIn(col("vec_id"), ids)).collect().map(_.getLong(0)).toSet
     }
 
     /** Unpersist the derived frames `next` does not carry over. A
@@ -281,10 +295,10 @@ final class SearchEngine(
                           ids: Seq[Long]): Seq[DataFrame] = {
     val art = snap.artifact
     snap.documents
-      .filter(col("doc_id").isin(ids: _*))
+      .filter(SearchEngine.idIn(col("doc_id"), ids))
       .select($"doc_id", $"text", lit(2).as("_src")) +:
     Seq(art).filter(_ => root && art.columns.contains("text")).map(_
-      .filter(col("text").isNotNull && col("vec_id").isin(ids: _*))
+      .filter(col("text").isNotNull && SearchEngine.idIn(col("vec_id"), ids))
       .select(col("vec_id").as("doc_id"), $"text", lit(1).as("_src")))
   }
 
@@ -297,7 +311,7 @@ final class SearchEngine(
       case Seq(docs, art) if ids.nonEmpty =>
         val artIds = art.select($"doc_id").collect().map(_.getLong(0))
         if (artIds.isEmpty) docs
-        else docs.filter(!col("doc_id").isin(artIds.toIndexedSeq: _*))
+        else docs.filter(!SearchEngine.idIn(col("doc_id"), artIds))
           .unionByName(art)
       case sources => sources.head
     }).drop("_src")
@@ -702,12 +716,12 @@ final class SearchEngine(
           s"$what still colliding with canonical ids after " +
             s"${SearchEngine.MaxCollisionPasses} passes (${excluded.size} excluded)")
       val found = top(if (excluded.isEmpty) delta
-        else delta.filter(!col("doc_id").isin(excluded.toIndexedSeq: _*)))
+        else delta.filter(!SearchEngine.idIn(col("doc_id"), excluded)))
       val ids = found.map(idOf).distinct
       // both checks are ≤ k-id point lookups
       val inCanon =
         if (ids.isEmpty) Set.empty[Long]
-        else canonical.filter(col("doc_id").isin(ids: _*))
+        else canonical.filter(SearchEngine.idIn(col("doc_id"), ids))
           .select($"doc_id").collect().map(_.getLong(0)).toSet
       val deleted =
         if (inCanon.isEmpty) Set.empty[Long] else deletedAmong(inCanon.toIndexedSeq)
@@ -946,7 +960,7 @@ final class SearchEngine(
     val docText =
       if (missing.isEmpty) Map.empty[Long, String]
       else spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id").isin(missing.toIndexedSeq: _*))
+        .filter(SearchEngine.idIn(col("doc_id"), missing))
         .select($"doc_id", $"text").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
     top.map(r => SearchHit(r.getLong(0),
@@ -1020,7 +1034,7 @@ final class SearchEngine(
         // hits' text is one In-filtered lookup of the live delta rows
         val ids = hits.map(_._2).distinct
         (hits, if (ids.isEmpty) Map.empty[Long, String]
-          else d.filter(col("doc_id").isin(ids: _*)).select($"doc_id", $"text")
+          else d.filter(SearchEngine.idIn(col("doc_id"), ids)).select($"doc_id", $"text")
             .collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
       }
     }

@@ -988,10 +988,11 @@ class SearchEngineSpec extends SparkSpec {
       .createTempDirectory("graft_stats_spec").toString + "/r"
     ServingRoot.init(spark, mainDir, root)
     val (idx0, delta0) = ServingRoot.resolve(spark, root)
-    // the fold stamped the epoch's own mean distortion as metadata,
-    // and it equals the statistic recomputed from the corpus
+    // the epoch carries its own mean distortion as metadata (written
+    // with the artifact's corpus, copied by init), and it equals the
+    // statistic recomputed from the corpus
     val stat = AnnIndex.readEpochStats(spark, idx0)
-    assert(stat.isDefined, "majorCompact must persist epoch stats")
+    assert(stat.isDefined, "the seeded epoch must carry epoch stats")
     val recomputed = AnnIndex.meanDistortion(spark, idx0,
       spark.read.parquet(s"$idx0/corpus").select($"embedding"))
     assert(math.abs(stat.get - recomputed) <= 1e-9 * math.max(1.0, recomputed))
@@ -1389,5 +1390,37 @@ class SearchEngineSpec extends SparkSpec {
     assert(eng.searchJsonRoot(sf0001, root, prompt, 10) === single)
     assert(frame.storageLevel === StorageLevel.NONE, "the replaced snapshot's frame is released")
     assert(exclusion().exists(_.isRight))
+  }
+
+  test("repeated unfiltered served singles on one snapshot compile no generated class after the first") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.search.{AnnIndex, HashingEmbedder}
+    import graft.search.AnnIndex.ServingRoot
+    import graft.queries.AnnQueries
+    val root = java.nio.file.Files.createTempDirectory("graft_codegen_spec").toString + "/r"
+    ServingRoot.init(spark, AnnQueries.ivfPqIndexDir(spark, sf0001), root)
+    val (idx, delta) = ServingRoot.resolve(spark, root)
+    // a live delta and a held tombstone, so both chains and the
+    // collision check run on every call
+    val emb = new HashingEmbedder(64)
+    AnnIndex.appendDeltaBatch(spark, idx, delta,
+      Seq(981000001L -> "codegen spec ingest one", 981000002L -> "codegen spec hash join")
+        .map { case (i, t) => (i, emb.embed(t).toSeq, t) }
+        .toDF("vec_id", "embedding", "text"), 0L, compactEvery = 2)
+    AnnIndex.appendTombstones(spark, delta, Seq(11L).toDF("vec_id"), 1L, compactEvery = 2)
+    val eng = new SearchEngine(spark)
+    // different prompts hit different ids: an id list inlined into
+    // generated code would compile afresh on every call
+    val prompts = AnnQueries.BatchServedPrompts ++ Seq(
+      "window function over partitions", "codegen spec hash join", "bloom filter probe")
+    val hitSets = prompts.map { p =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val json = eng.searchJsonRoot(sf0001, root, p, 10)
+      (p, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, json)
+    }
+    assert(hitSets.map(_._3).distinct.size === prompts.size, "the prompts must hit differently")
+    hitSets.tail.foreach { case (p, compiles, _) =>
+      assert(compiles === 0L, s"'$p' compiled $compiles classes on a warm snapshot")
+    }
   }
 }
