@@ -3,11 +3,12 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.GraftBridge.{column, expression}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Native Catalyst expressions for the vector hot path (SURVEY.md §4:
   * "custom Catalyst `Expression` with `doGenCode` — fastest").
@@ -39,6 +40,17 @@ object VectorExpressions {
     * iteration). Null on length mismatch, matching the `zip_with`
     * formulation's null-padding collapse. */
   def sqDist(a: Column, b: Column): Column = column(ArraySqDist(expression(a), expression(b)))
+
+  /** Unit-length copy of a vector column (ARRAY<FLOAT> or
+    * ARRAY<DOUBLE>) as ARRAY<DOUBLE>, in one loop per row — see
+    * [[ArrayL2Normalize]]. */
+  def l2Normalize(a: Column): Column = column(ArrayL2Normalize(expression(a)))
+
+  /** Index of the centroid nearest to a vector column (ARRAY<FLOAT>
+    * or ARRAY<DOUBLE>) under the 6-dp rounded squared L2 distance, ties
+    * to the lowest index — see [[NearestCentroid]]. */
+  def nearestCentroid(a: Column, centroids: Seq[Seq[Double]]): Column =
+    column(NearestCentroid(expression(a), centroids.map(_.toVector).toVector))
 
   /** Intersection size of two pre-sorted distinct ARRAY<LONG> columns
     * via two-pointer merge — no per-row hash set allocation. */
@@ -193,6 +205,163 @@ case class ArraySqDist(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** Loop bodies of [[ArrayL2Normalize]] and [[NearestCentroid]], shared
+  * by interpreted eval and generated code (one static call per row). */
+object VectorOps {
+
+  /** Element `i` of a float or double array, widened to Double. */
+  @inline private def elem(a: ArrayData, floatElems: Boolean, i: Int): Double =
+    if (floatElems) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** `a / ‖a‖` as ARRAY<DOUBLE>. The squared norm is ONE left fold in
+    * array order, so each element is `x / sqrt(Σ x²)` exactly as the
+    * `transform(a, x => x / sqrt(aggregate(a, …)))` formulation
+    * computes it. A null element makes that fold null, and a zero norm
+    * fails its `n != 0` guard: both return the widened copy, nulls
+    * kept. A NaN norm passes the guard (NaN divides every element). */
+  def l2Normalize(a: ArrayData, floatElems: Boolean): ArrayData = {
+    val n = a.numElements()
+    val out = new Array[Double](n)
+    var sq = 0.0
+    var hasNull = false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) hasNull = true
+      else {
+        val x = elem(a, floatElems, i)
+        out(i) = x
+        sq += x * x
+      }
+      i += 1
+    }
+    if (hasNull) {
+      val boxed = new Array[Any](n)
+      i = 0
+      while (i < n) { if (!a.isNullAt(i)) boxed(i) = out(i); i += 1 }
+      return new GenericArrayData(boxed)
+    }
+    val norm = math.sqrt(sq)
+    if (norm != 0.0) {
+      i = 0
+      while (i < n) { out(i) = out(i) / norm; i += 1 }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Spark's `round(d, 6)` on a double (HALF_UP on the shortest
+    * decimal form of `d`; NaN and ±∞ pass through). */
+  def round6(d: Double): Double =
+    if (d.isNaN || d.isInfinite) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Argmin over `centroids` of `round(Σ(aᵢ-cᵢ)², 6)`: a null `a` or a
+    * length mismatch scores +∞, scores compare under Spark's double
+    * ordering (NaN above +∞) and a tie keeps the lowest index, so an
+    * all-+∞ (or all-NaN) row is cell 0. */
+  def nearestCell(a: ArrayData, floatElems: Boolean, centroids: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < centroids.length) {
+      val ce = centroids(c)
+      val d =
+        if (a == null || a.numElements() != ce.length) Double.PositiveInfinity
+        else {
+          var s = 0.0
+          var i = 0
+          while (i < ce.length) {
+            val t = elem(a, floatElems, i) - ce(i)
+            s += t * t
+            i += 1
+          }
+          round6(s)
+        }
+      if (c == 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) { best = c; bestD = d }
+      c += 1
+    }
+    best
+  }
+}
+
+/** A unary expression over one ARRAY<FLOAT> or ARRAY<DOUBLE> vector. */
+trait VectorInput extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"argument must be ARRAY<FLOAT> or ARRAY<DOUBLE>, got $t")
+  }
+
+  protected def floatElems: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+/** `a / ‖a‖` over a float or double array: one pass folds the squared
+  * norm in array order, a second divides — where the higher-order
+  * formulation (`transform` whose lambda re-folds the norm with
+  * `aggregate`) is O(d²) interpreted arithmetic per row. Bit-identical
+  * to it, zero-norm and null-element branches included (asserted in
+  * IndexBuildSpec); null on a null array. */
+case class ArrayL2Normalize(child: Expression) extends VectorInput {
+
+  override val nullIntolerant: Boolean = true
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+
+  override def nullSafeEval(a: Any): Any =
+    VectorOps.l2Normalize(a.asInstanceOf[ArrayData], floatElems)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.expressions.VectorOps.l2Normalize($a, $floatElems)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Nearest-centroid index of a float or double array against a fixed
+  * centroid table: the generated code holds the table ONCE as a
+  * reference object and makes one call into [[VectorOps.nearestCell]],
+  * so its size does not grow with k and its source does not change
+  * with the table (a new table reuses the compiled class). The rule is
+  * the one `array_min(array(struct(coalesce(round(sqDist, 6), +∞),
+  * cell), …))` encodes — rounded distance first, lowest cell on a tie —
+  * and the result is bit-identical to it (asserted in IndexBuildSpec).
+  * Both earlier formulations inlined the table into the row's code: a
+  * `when`-chain fold duplicated its running-best subtree at every step,
+  * so its code grew 2^k and at k = 8 over 64 dims overflowed Janino's
+  * 64 KB method limit into interpreted execution; `array_min` over one
+  * struct per centroid is linear in k, but 16 centroids still generated
+  * a 5,917-line projection class that every ingest compiled afresh.
+  * Never null. */
+case class NearestCentroid(child: Expression, centroids: Vector[Vector[Double]])
+  extends VectorInput {
+
+  require(centroids.nonEmpty, "nearest centroid of an empty table")
+
+  @transient private lazy val table: Array[Array[Double]] = centroids.map(_.toArray).toArray
+
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    VectorOps.nearestCell(child.eval(input).asInstanceOf[ArrayData], floatElems, table)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = child.genCode(ctx)
+    val cents = ctx.addReferenceObj("centroids", table, "double[][]")
+    ev.copy(code = code"""
+      |${a.code}
+      |int ${ev.value} = graft.expressions.VectorOps.nearestCell(
+      |  ${a.isNull} ? null : ${a.value}, $floatElems, $cents);
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override def toString: String =
+    s"nearest_centroid($child, ${centroids.size}x${centroids.head.size})"
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** Jaccard of two sorted distinct ARRAY<LONG> inputs in one pass;

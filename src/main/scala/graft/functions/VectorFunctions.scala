@@ -3,9 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `ARRAY<FLOAT>` embedding columns, built from Spark's
-  * higher-order functions so everything stays inside whole-stage codegen
-  * (no UDF serialization boundary, no per-row closure dispatch).
+/** Vector math over `ARRAY<FLOAT>` embedding columns. The reference
+  * formulations here are Spark's higher-order functions (`aggregate`,
+  * `zip_with`, `transform`): no UDF serialization boundary, but NOT
+  * whole-stage codegen'd either — every element goes through an
+  * interpreted lambda dispatch (see [[graft.expressions.VectorExpressions]]).
+  * So the hot forms — [[cosineSimilarity]], [[l2Normalize]] — are backed
+  * by codegen'd Catalyst expressions computing the same folds, and the
+  * higher-order forms stay as the executable spec of the fold order.
   *
   * Determinism contract: every reduction is a *sequential left fold in
   * array order* (`aggregate` over `zip_with`), all arithmetic in Double.
@@ -66,12 +71,17 @@ object VectorFunctions {
       (acc, v) => acc + v))
 
   /** L2-normalized copy of the vector (unit length), element type Double.
-    * On a zero vector returns the vector unchanged. */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n =!= 0.0, transform(a, x => x.cast("double") / n))
-      .otherwise(transform(a, x => x.cast("double")))
-  }
+    * On a zero vector — or one with a null element, whose norm is null —
+    * returns the vector widened but unchanged; null on a null array.
+    *
+    * Backed by the codegen'd [[graft.expressions.ArrayL2Normalize]]:
+    * one fold of the squared norm per row, then one divide per element.
+    * The higher-order form `when(n =!= 0, transform(a, x => x / n))`
+    * re-folds `n` inside the lambda for every element — O(d²) boxed
+    * arithmetic per row — and is kept test-local as the reference the
+    * expression is bit-identical to (IndexBuildSpec). */
+  def l2Normalize(a: Column): Column =
+    graft.expressions.VectorExpressions.l2Normalize(a)
 
   /** Dimension guard: the reference rejects query vectors whose length is
     * not the configured dimension (reference server.py:55-58, 80-84 —

@@ -32,7 +32,7 @@ import graft.functions.VectorFunctions._
   * Scale shape: the centroid table is k×dim ALWAYS (driver-sized by
   * construction — the collect is O(k·dim), the same class as
   * [[RankedCumsum]]'s per-partition offsets); assignment is row-local
-  * math against inlined centroid literals for small k, and a
+  * math against a centroid table held by the expression for small k, and a
   * broadcast-join `min(struct(d, cell))` argmin for production k
   * (routing at [[LiteralPathMaxK]], bit-identical by construction —
   * shuffle volume stays one row per vector because the map-side
@@ -45,10 +45,9 @@ import graft.functions.VectorFunctions._
   */
 object SemDedup {
 
-  /** Largest k routed to the inlined when-chain assignment: beyond
-    * this the k-deep expression tree stops being codegen-friendly
-    * (JIT method limits), and the broadcast-join argmin below is the
-    * right plan anyway. Both paths share the rounded compare key and
+  /** Largest k routed to the row-local assignment ([[assignCell]]):
+    * beyond this the broadcast-join argmin below is the right plan —
+    * the per-row loop is O(k·dim) and the table rides every task. Both paths share the rounded compare key and
     * the lowest-cell tie-break, so routing never changes a result
     * (SemDedupSpec proves the paths bit-identical). */
   val LiteralPathMaxK = 32
@@ -64,35 +63,23 @@ object SemDedup {
   private def sqDist(emb: Column, centroid: Column): Column =
     round(graft.expressions.VectorExpressions.sqDist(emb, centroid), 6)
 
-  /** Nearest-centroid cell id (argmin over [[sqDist]], ties to the
-    * lowest cell id). Small-k path: the centroids are inlined
-    * literals, so assignment is pure row-local codegen with NO join at
-    * all. The argmin is `array_min` over `struct(d, cell)` entries —
-    * the struct compares distance first, cell second, which is EXACTLY
-    * the strict-less / lowest-cell-tie rule [[assignCellsJoin]]'s
-    * `min(struct(...))` uses — NOT a when-chain fold: the fold
-    * duplicates its running-best subtree twice per step, so its
-    * generated code grows 2^k and at k=8×64-dim janino overflows the
-    * 64 KB method limit and silently falls back to interpreted
-    * execution (round-11 Verify log). array_min is linear in k and
-    * stays inside whole-stage codegen. A null distance (length
-    * mismatch) maps to +∞ so it can never win — the fold skipped
-    * nulls the same way. */
-  private[graft] def assignCell(emb: Column, centroids: Seq[Seq[Double]]): Column = {
-    val entries = centroids.zipWithIndex.map { case (c, i) =>
-      struct(
-        coalesce(sqDist(emb, typedLit(c)), lit(Double.PositiveInfinity)).as("d"),
-        lit(i).as("cell"))
-    }
-    array_min(array(entries: _*)).getField("cell")
-  }
+  /** Nearest-centroid cell id (argmin over [[sqDist]]'s rounded
+    * distance, ties to the lowest cell id). Small-k path: the centroid
+    * table rides the expression itself, so assignment is row-local
+    * codegen with NO join — one [[graft.expressions.NearestCentroid]]
+    * call per row, whose rule (rounded distance first, lowest cell on a
+    * tie, a null or length-mismatched slice scoring +∞) is EXACTLY the
+    * strict-less / lowest-cell-tie rule [[assignCellsJoin]]'s
+    * `min(struct(d, cell))` uses. */
+  private[graft] def assignCell(emb: Column, centroids: Seq[Seq[Double]]): Column =
+    graft.expressions.VectorExpressions.nearestCentroid(emb, centroids)
 
   /** Large-k assignment: broadcast the k×dim centroid table, compute
     * every (vector, centroid) distance on the corpus's own partitions
     * (broadcast nested-loop — no corpus shuffle to build candidates),
     * then argmin per vector as `min(struct(d, cell))` — the struct
     * compares distance first and cell id second, which is EXACTLY the
-    * literal fold's strict-less / lowest-cell-tie rule. The k rows per
+    * row-local path's strict-less / lowest-cell-tie rule. The k rows per
     * vector are co-partitioned after the broadcast join, so the
     * map-side combine collapses them before the exchange: shuffle
     * volume is one row per corpus vector regardless of k. */
@@ -112,7 +99,7 @@ object SemDedup {
   }
 
   /** (vec_id, embedding, cell) for every corpus vector, routed to the
-    * codegen literal path or the broadcast-join path by k. */
+    * row-local path or the broadcast-join path by k. */
   private[graft] def assignCells(corpus: DataFrame, centroids: Seq[Seq[Double]]): DataFrame =
     if (centroids.size <= LiteralPathMaxK)
       corpus.select(col("vec_id"), col("embedding"),

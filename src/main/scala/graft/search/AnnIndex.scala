@@ -312,12 +312,8 @@ object AnnIndex {
   def saveIvfPq(idx: IvfIndex, codebooks: Seq[Seq[Seq[Double]]], subDim: Int,
                 dir: String): Unit = {
     idx.model.write.overwrite().save(s"$dir/model")
-    val withCodes = codebooks.zipWithIndex
-      .foldLeft(idx.assigned.drop("features")) { case (df, (cents, sub)) =>
-        df.withColumn(s"c$sub", graft.operators.SemDedup.assignCell(
-          slice(col("embedding"), sub * subDim + 1, subDim), cents))
-      }
-    writeCorpusAndStats(withCodes, codebooks, dir)
+    writeCorpusAndStats(withPqCodes(idx.assigned.drop("features"), "embedding",
+      codebooks, subDim), codebooks, dir)
     val spark = idx.assigned.sparkSession
     import spark.implicits._
     codebooks.zipWithIndex
@@ -502,10 +498,7 @@ object AnnIndex {
             slice(col("resid"), sub * subDim + 1, subDim).as("embedding")),
           pqK, pqIters)
       }
-      val withCodes = codebooks.zipWithIndex.foldLeft(based) { case (df, (cents, sub)) =>
-        df.withColumn(s"c$sub", graft.operators.SemDedup.assignCell(
-          slice(col("resid"), sub * subDim + 1, subDim), cents))
-      }.drop("resid")
+      val withCodes = withPqCodes(based, "resid", codebooks, subDim).drop("resid")
       idx.model.write.overwrite().save(s"$dir/model")
       writeByCell(withCodes, s"$dir/corpus")
       codebooks.zipWithIndex
@@ -571,18 +564,25 @@ object AnnIndex {
     * over the new rows against broadcast-literal centers/codebooks. */
   def encodeSegment(spark: SparkSession, indexDir: String, rows: DataFrame): DataFrame = {
     val model = loadQuantizer(spark, indexDir)
-    val cb = loadCodebooks(spark, indexDir)
-    val subs = cb.keys.toSeq.sorted
-    val subDim = cb(subs.head).head.size
+    val codebooks = codebookList(spark, indexDir)
     // the loaded quantizer itself assigns cells (predictionCol "cell"
     // persisted at fit time) — bit-identical to the main build's
     // assignment, so one cell ranking serves every segment
-    val assigned = model.transform(prepare(rows)).drop("features")
-    subs.foldLeft(assigned) { case (df, sub) =>
-      df.withColumn(s"c$sub", graft.operators.SemDedup.assignCell(
-        slice(col("embedding"), sub * subDim + 1, subDim), cb(sub)))
-    }
+    withPqCodes(model.transform(prepare(rows)).drop("features"), "embedding",
+      codebooks, codebooks.head.head.size)
   }
+
+  /** `df` plus its PQ code columns `c0..c{m-1}`: code `sub` is the
+    * nearest centroid of `codebooks(sub)` to the `subDim`-wide slice
+    * `sub` of column `src` — the ONE encoding every artifact writer
+    * ([[saveIvfPq]], [[saveIvfPqResidual]]) and the ingest
+    * ([[encodeSegment]]) share. */
+  private[graft] def withPqCodes(df: DataFrame, src: String,
+                                 codebooks: Seq[Seq[Seq[Double]]], subDim: Int): DataFrame =
+    codebooks.zipWithIndex.foldLeft(df) { case (acc, (cents, sub)) =>
+      acc.withColumn(s"c$sub", graft.operators.SemDedup.assignCell(
+        slice(col(src), sub * subDim + 1, subDim), cents))
+    }
 
   /** Probe SEVERAL cell-partitioned segments that share ONE quantizer +
     * codebook set (a main artifact plus [[encodeSegment]]-graduated

@@ -161,7 +161,9 @@ object SegmentStore {
     if (!isCommitted(fs, dst)) {
       val tmp = new Path(s"$storeDir/live/.b${batchId}_tmp")
       fs.delete(tmp, true) // stale partial from a crashed attempt
-      batch.withColumn(BatchCol, lit(batchId))
+      // the stamp is held by reference, not inlined: every batch of a
+      // store then runs the same generated classes
+      batch.withColumn(BatchCol, graft.expressions.HeldLiteral.of(batchId))
         .write.mode("overwrite").partitionBy(partitionCol)
         .parquet(tmp.toString)
       // dst here can only be an UNCOMMITTED partial (a committed one
